@@ -163,14 +163,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Ladder.localSession()
     // OFF, not WARN: the driver's 2000-char tail capture opened
     // mid-stack-trace in r12 AND r13 — benign in-run spam (DAGScheduler
     // "non-existent accumulator" ERRORs from cancelled noop jobs,
@@ -178,7 +171,6 @@ object Bench {
     // line and the driver's `parsed` field stayed null. Nothing in the
     // bench needs Spark's logs: a failing query is caught, recorded as -1,
     // and reported on OUR stderr via the `[bench] <name>: <err>` lines.
-    spark.sparkContext.setLogLevel("OFF")
     // Untimed warm-up: pay one-time session costs (codegen compiler, parquet
     // footer cache, JIT) outside the per-query timings.
     try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
@@ -322,15 +314,11 @@ object Bench {
     }
   } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** `%.3f` under Locale.ROOT — the f-interpolator uses the JVM default
-    * locale, and a comma-decimal host would render invalid JSON. */
-  private def d3(x: Double): String =
-    String.format(java.util.Locale.ROOT, "%.3f", Double.box(x))
-
-  /** `%.2f` for the per-query rows: 10 ms resolution is ample for a
-    * baseline comparison (calm rows measure 0.1–4 s) and the lost byte per
-    * row is exactly the line's scarcest resource — at 123 registry rows
-    * the map is ~92% of the artifact. */
+  /** `%.2f` (Locale.ROOT, like [[Ladder.d3]]) for the per-query rows:
+    * 10 ms resolution is ample for a baseline comparison (calm rows
+    * measure 0.1–4 s) and the lost byte per row is exactly the line's
+    * scarcest resource — at 123 registry rows the map is ~92% of the
+    * artifact. */
   private def d2(x: Double): String =
     String.format(java.util.Locale.ROOT, "%.2f", Double.box(x))
 
@@ -509,7 +497,7 @@ object Bench {
         s"""$qField,$hotField""" + scalarField +
         s"""$prevField$attestField$loadField"failed":$failed,$noiseBand""" +
         s""""calibration_sec":${calibJson(if (scalars) 6 else 4)},""" +
-        s""""value":${d3(total)},"sf":"$sfShort"}"""
+        s""""value":${Ladder.d3(total)},"sf":"$sfShort"}"""
     }
     // threshold matches BenchSanitySpec's < 1880 budget. Budget math since
     // the round-14 tail hygiene: the dash guard + log-OFF run make the

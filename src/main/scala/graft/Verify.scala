@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -11,16 +10,7 @@ object Verify {
       case Array(s, o)    => (s, o, "")
       case Array(s, o, f) => (s, o, f)
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .withExtensions(new GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Ladder.localSession("spark.sql.session.timeZone" -> "UTC")
     new java.io.File(outDir).mkdirs()
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
     SparkEntry.queries.filter(_._1.startsWith(nameFilter)).foreach { case (name, fn) =>

@@ -30,8 +30,9 @@ import org.apache.spark.sql.expressions.Aggregator
   * billions of keys (n = 10^9, k = 4 → ~0.9 GB); beyond that, shard the
   * corpus and build one bitmap per shard (OR-merge stays free).
   *
-  * Register per session: `spark.udf.register("graft_bloom_bits",
-  * functions.udaf(new BloomBits(m)))`.
+  * Apply it as a column function, `functions.udaf(new BloomBits(m))
+  *   .withName("graft_bloom_bits")(col("pos"))`, not through `spark.udf.register`:
+  * a query body must not mutate the session's function registry.
   */
 class BloomBits(mBits: Int) extends Aggregator[Long, Array[Long], Array[Long]] {
   require(mBits > 0 && mBits % 64 == 0, s"mBits must be a positive multiple of 64, got $mBits")

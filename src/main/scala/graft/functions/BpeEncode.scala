@@ -49,7 +49,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *    assumption, so that (never produced by training — a merged pair's
   *    adjacency count drops to 0 and can't re-form) falls back to the
   *    scan path. BpeEncodeSpec pins scan ≡ heap ≡ imperative reference,
-  *    including at k ≥ 300; BpeSoak's vocab axis measures the flat-in-k
+  *    including at k ≥ 300; `Ladder bpe encode` measures the flat-in-k
   *    cost.
   *
   * Symbols are built per CODE POINT (`codePointAt`), not per UTF-16 code

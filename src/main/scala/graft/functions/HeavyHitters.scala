@@ -25,8 +25,9 @@ import org.apache.spark.sql.expressions.Aggregator
   * `finish` emits the top `k` surviving entries as (token, count) structs
   * ordered by (count desc, token asc) — a total, engine-independent order.
   *
-  * Register per session: `spark.udf.register("graft_topk",
-  * functions.udaf(new HeavyHitters(m, k)))`.
+  * Apply it as a column function, `functions.udaf(new HeavyHitters(m, k))
+  *   .withName("graft_topk")(col("tok"))`, not through `spark.udf.register`:
+  * a query body must not mutate the session's function registry.
   */
 class HeavyHitters(m: Int, k: Int)
     extends Aggregator[String, Map[String, Long], Seq[(String, Long)]] {

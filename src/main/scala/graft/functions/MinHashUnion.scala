@@ -14,8 +14,9 @@ import org.apache.spark.sql.expressions.Aggregator
   * incremental dedup at 100 TB (per-partition partial merge = tiny fixed
   * state, one k-long array per group).
   *
-  * Register per session: `spark.udf.register("graft_minhash_union",
-  * functions.udaf(new MinHashUnion(k)))`.
+  * Apply it as a column function, `functions.udaf(new MinHashUnion(k))
+  *   .withName("graft_minhash_union")(col("sig"))`, not through `spark.udf.register`:
+  * a query body must not mutate the session's function registry.
   */
 class MinHashUnion(k: Int) extends Aggregator[Array[Long], Array[Long], Array[Long]] {
 

@@ -86,15 +86,16 @@ final class NflPipeline(
 object NflPipeline {
   /** The pipeline's CLUSTER POSTURE as code (r18 verdict item 5): the
     * session settings the 1000× rung (600M tracking rows, PLANS.md Round
-    * 18) needed to complete live in NflScaleBench as one shared map, so
-    * the bench and any real deployment read the same recipe instead of
-    * re-deriving it from prose. `cpus` is the session's executor-thread
+    * 18) needed to complete live here as one shared map, so the `Ladder
+    * nfl` scale bench and any real deployment read the same recipe instead
+    * of re-deriving it from prose. `cpus` is the session's executor-thread
     * count (local mode) or per-executor core count (cluster).
     *
     *  - adaptive initialPartitionNum = 16×cpus: an N×-scale shuffle into a
     *    1×-sized partition count concentrates per-task window/aggregate
-    *    state until it OOMs (the r14 ScaleLadder lesson); AQE coalesces
-    *    small runs back by bytes, so over-provisioning costs nothing.
+    *    state until it OOMs (the r14 `Ladder queries --factor` lesson);
+    *    AQE coalesces small runs back by bytes, so over-provisioning costs
+    *    nothing.
     *  - zstd shuffle/spill compression + compressed RDD cache blocks: the
     *    1000× rung is DISK-bound (shuffle spill + the persisted frame
     *    tables), and zstd is ~1.5-2× denser than the lz4 default — the

@@ -21,7 +21,7 @@ import org.apache.spark.sql.functions._
   *    fan-out is bounded by O(√|E|) on any graph — a 10^6-degree hub's
   *    edges all point INWARD and it contributes zero wedges.
   *  - `orientByDegree = false` (id order): the naive baseline whose wedge
-  *    count on a hub is deg² — kept for GraphSoak to MEASURE the gap, and
+  *    count on a hub is deg² — kept for `Ladder graph` to MEASURE the gap, and
   *    as the semantics twin (same triangles, different traversal) that
   *    the x96 DuckDB oracle replays.
   *

@@ -1078,7 +1078,7 @@ object SimilarityQueries {
     * raises k so cells stay bounded (k ~ n/20k in the paper), which only
     * changes the literal table; the plan is unchanged. */
   /** The cell-scoped SemDeDup engine over any (vec_id, cell, embedding)
-    * frame — x67's plan, parameterized so AnnSoak can drive it with
+    * frame — x67's plan, parameterized so `Ladder ann` can drive it with
     * SCALED cell counts (the production contract: k grows with n so cells
     * stay bounded and pairwise work stays Σ|cell|² ≈ linear). Unsorted;
     * the registry query adds its deterministic ORDER BY. */

@@ -613,16 +613,18 @@ object TextQueries {
     (chain, erep.select("doc_id", "e_rep"))
   }
 
-  /** [[chainAndErepOf]] for the consumers that only read the chain. */
+  /** [[chainAndErepOf]] for the consumers that only read the chain. They
+    * still pin `rep_text`: the erep frame is checkpointed with the rep
+    * text because the signature derivation reads it, whoever consumes the
+    * result. */
   private[queries] def chainOf(dd: DataFrame): DataFrame = chainAndErepOf(dd)._1
 
   val dedupClusters = sql("x26_dedup_clusters", HashOracles.dedupClusters) { (s, d) =>
-    s.udf.register("graft_minhash_union",
-      org.apache.spark.sql.functions.udaf(new graft.functions.MinHashUnion(32)))
+    val minhashUnion = udaf(new graft.functions.MinHashUnion(32)).withName("graft_minhash_union")
     val (sigs, labels) = sigsAndLabels(s, d)
     val clusters = labels.join(sigs, Seq("doc_id"))
       .groupBy("rep")
-      .agg(count(lit(1)).as("n_docs"), expr("graft_minhash_union(sig)").as("csig"))
+      .agg(count(lit(1)).as("n_docs"), minhashUnion(col("sig")).as("csig"))
       .localCheckpoint(eager = false) // both sides of the cross-cluster join
     val cbands = clusters.select(col("rep"), explode(
       transform(sequence(lit(0), lit(7)),
@@ -1803,9 +1805,9 @@ object TextQueries {
       |  FROM (SELECT lang, unnest(string_split(text, ' ')) AS tok FROM documents) t
       |  GROUP BY lang, tok) ranked
       |WHERE rk <= 5 ORDER BY lang, rk""".stripMargin) { (s, d) =>
-    s.udf.register("graft_topk", udaf(new graft.functions.HeavyHitters(1024, 5)))
+    val topk = udaf(new graft.functions.HeavyHitters(1024, 5)).withName("graft_topk")
     docs(s, d).select(col("lang"), explode(tokens).as("tok"))
-      .groupBy("lang").agg(expr("graft_topk(tok)").as("tk"))
+      .groupBy("lang").agg(topk(col("tok")).as("tk"))
       .select(col("lang"), posexplode(col("tk")))
       .select(col("lang"), col("col._1").as("tok"), col("col._2").as("cnt"),
         (col("pos") + 1).cast("int").as("rk"))
@@ -2181,7 +2183,7 @@ object TextQueries {
     substringDupOf(docs(s, d))
   }
 
-  /** x60's body over any (doc_id, text) frame — DedupSoak scales it. */
+  /** x60's body over any (doc_id, text) frame — `Ladder dedup` scales it. */
   def substringDupOf(dd: DataFrame): DataFrame = {
     // r20 note: pinning this explode (x61-style) was MEASURED SLOWER here
     // (0.65 → 0.87 s) — the subtree is one cheap fused codegen pass and
@@ -2217,7 +2219,7 @@ object TextQueries {
     substringCutOf(docs(s, d))
   }
 
-  /** x61's body over any (doc_id, text) frame — DedupSoak scales it.
+  /** x61's body over any (doc_id, text) frame — `Ladder dedup` scales it.
     *
     * r20 OPTIMIZATION (guide §8: decide with small rows, move big rows
     * once / §2.3-2.4): the old plan posexploded EVERY token of EVERY doc
@@ -2325,7 +2327,7 @@ object TextQueries {
     * — the same two-level distributed prefix sum as x53's cut, minus the
     * quota (every row is kept), so no source ever serializes its
     * concatenation order through one task the way the oracle's plain
-    * window does at 100 TB. MixtureSoak measures that crossover: the
+    * window does at 100 TB. `Ladder mixture` measures that crossover: the
     * one-task-per-group window goes superlinear at 16 M rows while the
     * bucket-split plan stays near-flat. */
   private val packSeqLen = 512L
@@ -2495,10 +2497,9 @@ object TextQueries {
     * folded through the [[graft.functions.BloomBits]] OR-aggregator
     * (map-side combined; the exchange carries positions, never keys). */
   def bloomBuild(keys: DataFrame, keyCol: String, mBits: Int): DataFrame = {
-    keys.sparkSession.udf.register(s"graft_bloom_bits_$mBits",
-      org.apache.spark.sql.functions.udaf(new graft.functions.BloomBits(mBits)))
+    val bloomBits = udaf(new graft.functions.BloomBits(mBits)).withName(s"graft_bloom_bits_$mBits")
     keys.select(explode(bloomPositions(col(keyCol), mBits)).as("pos"))
-      .agg(expr(s"graft_bloom_bits_$mBits(pos)").as("bits"))
+      .agg(bloomBits(col("pos")).as("bits"))
   }
 
   /** Exact membership of `batch(keyCol)` against `corpus(keyCol)` through a
@@ -2660,7 +2661,7 @@ object TextQueries {
     * tallies are partial-final aggregates; the DuckDB oracle traverses
     * the same graph by id-orientation — different wedge sets, identical
     * triangles. cc stays in x69's BIGINT ppm fixed point (no float).
-    * Kernel: [[graft.operators.Triangles]] (GraphSoak measures the
+    * Kernel: [[graft.operators.Triangles]] (`Ladder graph` measures the
     * orientation gap on a planted-hub graph). */
   val dupTriangles = sql("x96_dup_triangles", HashOracles.dupTriangles) { (s, d) =>
     val sigs = minhashSignaturesOf(docs(s, d)).localCheckpoint(eager = false)
@@ -2885,7 +2886,7 @@ object TextQueries {
   }
 
   /** x80's engine over an arbitrary (doc_id, text) frame (factored so
-    * SparseSoak ladders the identical plan). */
+    * `Ladder sparse` ladders the identical plan). */
   def sparseCosinePairsOf(dd: DataFrame): DataFrame = {
     val tok = dd
       .select(col("doc_id"), explode(array_distinct(split(col("text"), " "))).as("term"))
@@ -3422,8 +3423,8 @@ object TextQueries {
       sum("n_tok").as("n_tokens"))
       // r21 (r20 verdict item 6): pin the 16-row rollup so its own grand
       // total cannot recompute the manifest tail (x132's documented
-      // pattern; ProfileR21 A/B: as-is swings 0.89-1.29 s with load,
-      // pinned reads a stable 0.91-0.95 s)
+      // pattern; OPTIMIZATION_r21.md A/B: as-is swings 0.89-1.29 s with
+      // load, pinned reads a stable 0.91-0.95 s)
       .localCheckpoint(eager = false)
     g.crossJoin(broadcast(g.agg(sum("n_tokens").as("tot"))))
       .select(col("shard"), col("n_clusters"), col("n_docs_rep"), col("n_tokens"),
@@ -4552,12 +4553,18 @@ object TextQueries {
   }
 
   /** x135's engine over any (doc_id, lang, text) frame (factored so the
-    * edge spec can hand-build boundary-tie and empty-middle cases). */
+    * edge spec can hand-build boundary-tie and empty-middle cases).
+    *
+    * Precondition: `doc_id` is unique in `dd`. A duplicated id pools its
+    * texts' transitions into one score row, which the doc-keyed attach
+    * then repeats once per duplicate (TextQueriesEdgeSpec pins this). Not
+    * checked at run time: the check would cost a Spark job on every call. */
   def pplBucketsOf(dd: DataFrame): DataFrame = {
-    // r21 OPTIMIZATION (guide §2.3, ProfileR21 A/B: 0.91 → 0.76 s): attach
-    // lang by ONE doc-keyed join after the rollup instead of carrying it
-    // on every bigram row through the chain's exchanges — lang is
-    // functionally dependent on doc_id, so the values are identical.
+    // r21 OPTIMIZATION (guide §2.3, OPTIMIZATION_r21.md A/B: 0.91 →
+    // 0.76 s): attach lang by ONE doc-keyed join after the rollup instead
+    // of carrying it on every bigram row through the chain's exchanges —
+    // lang is functionally dependent on doc_id, so the values are
+    // identical.
     val sco = lmScoreCore(dd, Nil)
       .join(dd.select("doc_id", "lang"), Seq("doc_id"))
       .withColumn("score_ppm", expr("sum_f div n_trans"))
@@ -4990,7 +4997,12 @@ object TextQueries {
       .otherwise(expr(s"CAST($a AS BIGINT) * head_mass div total_head"))
 
   /** x137's engine over any (doc_id, lang, source, text) frame. Budget
-    * B = 10⁹ (x129's convention), anneal A = B div 10, main M = B − A. */
+    * B = 10⁹ (x129's convention), anneal A = B div 10, main M = B − A.
+    *
+    * Precondition: `doc_id` is unique in `dd`. A duplicated id pools its
+    * texts' transitions into one score row, which the doc-keyed attach
+    * then repeats once per duplicate (TextQueriesEdgeSpec pins this). Not
+    * checked at run time: the check would cost a Spark job on every call. */
   def annealScheduleOf(dd: DataFrame): DataFrame = {
     val B = 1000000000L
     val A = B / 10
@@ -5005,8 +5017,8 @@ object TextQueries {
     val tot = per.agg(
       aggregate(array_sort(collect_list(sqrt(col("gated").cast("double")))),
         lit(0.0), (a, x) => a + x).as("sum_sqrt"))
-    // r21 OPTIMIZATION (guide §2.3, measured in ProfileR21): the 4-column
-    // carry (lang, source, n_tok, pass) used to ride EVERY bigram row
+    // r21 OPTIMIZATION (guide §2.3, measured in OPTIMIZATION_r21.md): the
+    // 4-column carry (lang, source, n_tok, pass) used to ride EVERY bigram row
     // through the chain's two corpus-scale exchanges; attaching the
     // doc-level attributes by ONE doc_id join after the rollup shuffles
     // doc-count rows instead of bigram-count bytes — in-window A/B:
@@ -5104,12 +5116,17 @@ object TextQueries {
     doremiWeightsOf(docs(s, d)).orderBy("source")
   }
 
-  /** x141's engine over any (doc_id, source, text) frame. */
+  /** x141's engine over any (doc_id, source, text) frame.
+    *
+    * Precondition: `doc_id` is unique in `dd`. A duplicated id pools its
+    * texts' transitions into one score row, which the doc-keyed attach
+    * then repeats once per duplicate (TextQueriesEdgeSpec pins this). Not
+    * checked at run time: the check would cost a Spark job on every call. */
   def doremiWeightsOf(dd: DataFrame): DataFrame = {
-    // r21 OPTIMIZATION (guide §2.3, ProfileR21 A/B: 0.97 → 0.86 s): the
-    // (source, n_tok) attributes attach by ONE doc-keyed join after the
-    // rollup instead of riding every bigram row (same values — both are
-    // functions of the doc row).
+    // r21 OPTIMIZATION (guide §2.3, OPTIMIZATION_r21.md A/B: 0.97 →
+    // 0.86 s): the (source, n_tok) attributes attach by ONE doc-keyed join
+    // after the rollup instead of riding every bigram row (same values —
+    // both are functions of the doc row).
     val sco = lmScoreCore(dd, Nil)
       .join(dd.select(col("doc_id"), col("source"),
         size(split(trim(col("text")), "\\s+")).cast("long").as("n_tok")), Seq("doc_id"))

@@ -165,13 +165,12 @@ object EventStream {
     * Output: (hour_start, lang, tok, cnt, rk). */
   def topkTokens(docs: DataFrame, m: Int = 1024, k: Int = 5,
       lateness: String = "10 minutes"): DataFrame = {
-    docs.sparkSession.udf.register("graft_topk_win",
-      udaf(new graft.functions.HeavyHitters(m, k)))
+    val topk = udaf(new graft.functions.HeavyHitters(m, k)).withName("graft_topk_win")
     docs
       .withWatermark("ts", lateness)
       .select(col("ts"), col("lang"), explode(split(col("text"), " ")).as("tok"))
       .groupBy(window(col("ts"), "1 hour").as("hour"), col("lang"))
-      .agg(expr("graft_topk_win(tok)").as("tk"))
+      .agg(topk(col("tok")).as("tk"))
       .select(col("hour"), col("lang"), posexplode(col("tk")))
       .select(col("hour.start").as("hour_start"), col("lang"),
         col("col._1").as("tok"), col("col._2").as("cnt"),

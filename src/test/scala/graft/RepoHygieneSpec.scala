@@ -184,6 +184,22 @@ class RepoHygieneSpec extends AnyFunSuite with Matchers {
     }
   }
 
+  test("every `runMain graft.<Obj>` in README.md and PLANS.md names a runnable main") {
+    // doc rot guard: fourteen dev-tool mains were folded into graft.Ladder,
+    // and a documented command line must not outlive the object it runs
+    val cmd = raw"runMain graft\.([A-Za-z0-9_]+(?:\.[A-Za-z0-9_]+)*)".r
+    val named = Seq("README.md", "PLANS.md").flatMap { f =>
+      cmd.findAllMatchIn(new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(f)), "UTF-8")).map(m => f -> m.group(1))
+    }.distinct
+    named.map(_._2) should contain("Ladder")
+    def runnable(obj: String) = scala.util.Try(Class.forName(s"graft.$obj")
+      .getMethod("main", classOf[Array[String]]))
+      .toOption.exists(m => java.lang.reflect.Modifier.isStatic(m.getModifiers))
+    runnable("NoSuchTool") shouldBe false
+    named.filterNot { case (_, obj) => runnable(obj) } shouldBe empty
+  }
+
   test("repo root has no unexpected files") {
     // tests run from the repo root — don't hardcode a checkout path, and
     // treat an unreadable root as a FAILURE, not a vacuous pass

@@ -215,7 +215,7 @@ class NflPipelineSpec extends AnyFunSuite with Matchers with SparkTestBase {
 
   test("scaleConf is the one cluster posture the scale bench and deployments share") {
     // r18 verdict item 5: the knobs the 1000× rung needed live as code,
-    // not prose — NflScaleBench folds exactly this map into its builder
+    // not prose — `Ladder nfl` folds exactly this map into its session
     val c = NflPipeline.scaleConf(32)
     c("spark.sql.shuffle.partitions") shouldBe "32"
     c("spark.sql.adaptive.coalescePartitions.initialPartitionNum") shouldBe "512"

@@ -97,6 +97,12 @@ class QuantilesSpec extends AnyFunSuite with Matchers with SparkTestBase {
     Quantiles.largestGroupRows(withNulls.limit(0), "g", "v") shouldBe 0L
   }
 
+  test("grouping a column by itself is rejected up front, not as an ambiguous-frame AnalysisException") {
+    val df = spark.range(10).select((col("id") % 2).as("g"), col("id").cast("double").as("v"))
+    an[IllegalArgumentException] should be thrownBy
+      Quantiles.groupQuantiles(df, "v", "v", Seq(0.5))
+  }
+
   test("rows-per-group crossover picks builtin below, parallel above") {
     import spark.implicits._
     val df = (0 until 3).flatMap(g => (0 until 40).map(i => (s"g$g", i.toDouble)))

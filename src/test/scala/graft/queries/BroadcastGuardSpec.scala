@@ -85,7 +85,7 @@ class BroadcastGuardSpec extends AnyFunSuite with Matchers with SparkTestBase {
     // so the assertion targets the single-key ctx join specifically.
     val dd = graft.Tables.documents(spark, "/root/testdata/sf0.1")
     // r21: x135 now attaches lang by a doc-keyed join after the rollup
-    // (ProfileR21 A/B) — pin the chain x135 actually checkpoints
+    // (OPTIMIZATION_r21.md A/B) — pin the chain x135 actually checkpoints
     val sco = TextQueries.lmScoreCore(dd, Nil)
       .join(dd.select("doc_id", "lang"), Seq("doc_id"))
     sco.queryExecution.analyzed.toString should not include "UnresolvedHint"

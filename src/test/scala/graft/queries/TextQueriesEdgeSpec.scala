@@ -1283,4 +1283,54 @@ class TextQueriesEdgeSpec extends AnyFunSuite with Matchers with SparkTestBase {
       q shouldBe 0L; s shouldBe 0L; rp shouldBe 0L; w shouldBe 0.0
     }
   }
+
+  test("*Of engines assume a unique doc_id: a duplicated id is pooled, then repeated per duplicate row") {
+    // pplBucketsOf / doremiWeightsOf / annealScheduleOf document the
+    // precondition instead of checking it (a check costs a job per call);
+    // this pins what a violating frame yields, so a change is deliberate.
+    // Rows: doc 1 "x a x a" (x→a, a→x, x→a), doc 2 "x b" (x→b), doc 3
+    // "y z". Corpus model: f(x→a) = ⌊2/3·10⁶⌋, f(a→x) = f(y→z) = 10⁶,
+    // f(x→b) = ⌊1/3·10⁶⌋ — the same in both frames.
+    import spark.implicits._
+    import org.apache.spark.sql.functions.sum
+    val texts = Seq("x a x a", "x b", "y z")
+    def frame(ids: Seq[Long]) = ids.zip(texts).map { case (id, t) => (id, "zz", "s", t) }
+      .toDF("doc_id", "lang", "source", "text")
+    val unique = frame(Seq(1L, 2L, 3L))
+    val dup = frame(Seq(1L, 1L, 3L)) // doc 2 reuses id 1
+
+    // x135: the duplicated id's 3 + 1 transitions pool into ONE score row
+    // (n_trans 4), which the doc-keyed lang attach repeats for both rows
+    def ppl(dd: org.apache.spark.sql.DataFrame) = TextQueries.pplBucketsOf(dd)
+      .agg(sum("n_docs"), sum("n_trans")).head()
+    val (pu, pd) = (ppl(unique), ppl(dup))
+    (pu.getLong(0), pu.getLong(1)) shouldBe ((3L, 5L))
+    (pd.getLong(0), pd.getLong(1)) shouldBe ((3L, 9L))
+
+    // x141: both rows carry the pooled score ⌊(2333332 + 333333) / 4⌋ =
+    // 666666 instead of their own 777777 and 333333, so the source mean
+    // moves from 2111110 div 3 to 2333332 div 3; token mass stays per row
+    def doremi(dd: org.apache.spark.sql.DataFrame) =
+      TextQueries.doremiWeightsOf(dd.select("doc_id", "source", "text")).head()
+    val (du, dq) = (doremi(unique), doremi(dup))
+    (du.getLong(1), du.getLong(2), du.getLong(3)) shouldBe ((3L, 8L, 703703L))
+    (dq.getLong(1), dq.getLong(2), dq.getLong(3)) shouldBe ((3L, 8L, 777777L))
+
+    // x137 reads the same pooled score rows; its docs must pass the x64
+    // gate (28 tokens, mean length 4.8, two stop words, no repeated bigram)
+    def words(p: String, r: Range) = r.map(i => f"$p$i%03d")
+    val gated = Seq(
+      words("pa", 1 to 26), words("pb", 1 to 26), words("pa", 1 to 13) ++ words("pc", 1 to 13))
+      .map(ws => ("the" +: "a" +: ws).mkString(" "))
+    def annealFrame(ids: Seq[Long]) = ids.zip(gated).map { case (id, t) => (id, "zz", "s", t) }
+      .toDF("doc_id", "lang", "source", "text")
+    def supply(ids: Seq[Long]) = TextQueries.annealScheduleOf(annealFrame(ids)).collect()
+      .map(r => r.getString(1) -> r.getLong(3)).toMap
+    // unique ids: the pb doc alone scores above the upper tertile, so it is
+    // the 28-token anneal head. Pooled with the pa doc, both rows share one
+    // middling score, the head pool empties, and so does the anneal phase;
+    // the gate-based main-phase supply (per input row) is unaffected
+    supply(Seq(1L, 2L, 3L)) shouldBe Map("main" -> 84L, "anneal" -> 28L)
+    supply(Seq(1L, 1L, 3L)) shouldBe Map("main" -> 84L, "anneal" -> 0L)
+  }
 }
