@@ -55,9 +55,11 @@ object PzModel {
     new Pipeline().setStages(Array(assembler, scaler, est))
   }
 
-  /** caret `resamples` analog (MC:27-30, K1/K6): per-(model, repeat, fold)
-    * RMSE rows — the bwplot/dotplot feed that compares DISTRIBUTIONS of
-    * fold errors, not just means. Fold assignment is seeded per repeat and
+  /** MC:27-30 model comparison, the caret `resamples` analog (K1/K6): one
+    * row per (model, repeat, fold) with its RMSE — the bwplot/dotplot feed
+    * that compares DISTRIBUTIONS of fold errors, not just means;
+    * `groupBy("model").avg("rmse")` reproduces the one-row-per-model mean
+    * table. Fold assignment is seeded per repeat and
     * SHARED across models (caret's resamples contract: every model is
     * evaluated on the same resample set, so fold-level differences are
     * paired). `repeats` seeds emulate caret's repeatedcv.
@@ -65,8 +67,8 @@ object PzModel {
     * Scale: each fold's train/test split is a filter on a precomputed fold
     * column (no reshuffle per fold); the fold-assigned frame is cached for
     * the duration of one repeat and released after. */
-  def resamples(df: DataFrame, models: Seq[String] = Seq("linear", "rf", "gbt", "ridge"),
-      numFolds: Int = 10, repeats: Int = 3, seed: Long = 99L): DataFrame = {
+  def compareModels(df: DataFrame, models: Seq[String] = Seq("linear", "rf", "gbt", "ridge"),
+      numFolds: Int = 10, repeats: Int = 1, seed: Long = 99L): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     val evaluator = new RegressionEvaluator()
@@ -93,23 +95,16 @@ object PzModel {
   }
 
   /** K-fold CV RMSE for one pipeline (MC:16's trainControl): the mean of the
-    * `resamples` fold RMSEs (same fold machinery, so `compareModels` rows
-    * average exactly to this) across `repeats` seeds (K1). */
+    * `compareModels` fold RMSEs (same fold machinery, so its rows average
+    * exactly to this) across `repeats` seeds (K1). */
   def cvRmse(df: DataFrame, estimatorName: String, numFolds: Int = 10,
       repeats: Int = 3, seed: Long = 99L): Double = {
-    val rmses = resamples(df, Seq(estimatorName), numFolds, repeats, seed)
+    val rmses = compareModels(df, Seq(estimatorName), numFolds, repeats = repeats, seed = seed)
       .select("rmse").collect().map(_.getDouble(0))
     require(rmses.nonEmpty,
       s"no usable folds for $estimatorName — input too small for $numFolds folds")
     rmses.sum / rmses.size
   }
-
-  /** MC:27-30 `resamples` comparison feed: one row per model × repeat ×
-    * fold with its RMSE (see `resamples`); `groupBy("model").avg("rmse")`
-    * reproduces the one-row-per-model mean table. */
-  def compareModels(df: DataFrame, models: Seq[String] = Seq("linear", "rf", "gbt", "ridge"),
-      numFolds: Int = 10, repeats: Int = 1, seed: Long = 99L): DataFrame =
-    resamples(df, models, numFolds, repeats, seed)
 
   /** MC:33-35: fit, score, and attach the residual — `xPZs` is the model's
     * expectation, `dPZs = actual − expected` is the player's value-add. */

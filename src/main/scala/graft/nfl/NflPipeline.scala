@@ -16,8 +16,7 @@ final class NflPipeline(
     tracking: DataFrame,
     pff: DataFrame,
     plays: DataFrame,
-    players: DataFrame,
-    storage: StorageLevel = StorageLevel.MEMORY_AND_DISK) {
+    players: DataFrame) {
 
   /** Two kinds of stage boundary:
     *  - big frame-grain tables keep `persist` (compressed columnar
@@ -35,7 +34,7 @@ final class NflPipeline(
 
   /** DL: cleaned tracking-grain fact. */
   lazy val mainDf: DataFrame =
-    NflIngest.buildMainDf(tracking, pff, plays, players).persist(storage)
+    NflIngest.buildMainDf(tracking, pff, plays, players).persist(StorageLevel.MEMORY_AND_DISK)
 
   /** MB:22-30 play bounds (tiny per-play tables, reused by 3+ branches). */
   lazy val playStart: DataFrame = truncated(PlayBounds.playStart(mainDf))
@@ -53,7 +52,7 @@ final class NflPipeline(
     * r18 width prune this persists only the frame-grain math columns; the
     * rusher-play labels live in [[rusherLabels]]. */
   lazy val rusherFrames: DataFrame =
-    PressureZone.rusherFrames(mainDf, setPoints, playStart, playEnd).persist(storage)
+    PressureZone.rusherFrames(mainDf, setPoints, playStart, playEnd).persist(StorageLevel.MEMORY_AND_DISK)
 
   /** The rusher-play-constant label columns (r18 width prune) — a pure
     * filter+project over the persisted mainDf, read once by the metric's
@@ -78,9 +77,11 @@ final class NflPipeline(
   /** WIP:73-77 time-to-throw. */
   lazy val timeToThrow: DataFrame = TimeToThrow.compute(mainDf)
 
+  /** Drops the two persisted frames. The `truncated` stages need no call:
+    * their blocks belong to the checkpoint RDDs, which the cache manager
+    * never holds, so `unpersist` on them is a no-op. */
   def unpersistAll(): Unit =
-    Seq(mainDf, playStart, playEnd, setPoints, rusherFrames, metric, rushersFinal)
-      .foreach(_.unpersist(false))
+    Seq(mainDf, rusherFrames).foreach(_.unpersist(false))
 }
 
 object NflPipeline {

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -38,26 +39,46 @@ object EventsQueries {
       .orderBy("hour", "event_type")
   }
 
-  /** Gap-based sessionization: a new session starts after a >30 min silence.
-    * One shuffle (window partition by user); gap arithmetic on exact integer
-    * microseconds so both engines agree bit-for-bit. */
-  val sessionize = sql(
-    "x16_ev_sessionize",
-    """WITH g AS (
-      |  SELECT event_id, user_id, ts,
+  /** Events of one user in (ts, event_id) order: the order the session rule,
+    * its consumers and the per-user lag/split windows read in. */
+  private val byUserTime = Window.partitionBy("user_id").orderBy("ts", "event_id")
+  private val byUserTimeCum = byUserTime.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+
+  /** The session rule, engine side: a user's first event, or an event more
+    * than 30 min after the user's previous one, starts a new session.
+    * `sessionGap(us)` (`us` = event time in exact microseconds) is the gap
+    * to the previous event, to be added as `gap_us`; `sessionId` then
+    * numbers the sessions by counting starts (a BIGINT already, so the
+    * `.cast("long")` some consumers add changes no value). [[sessionsSql]]
+    * is the oracle side. */
+  private def sessionGap(us: Column): Column = us - lag(us, 1).over(byUserTime)
+  private val sessionId: Column =
+    sum(when(col("gap_us").isNull || col("gap_us") > 1800000000L, 1).otherwise(0)).over(byUserTimeCum)
+
+  /** The session rule, oracle side: `g` is the events (`event_id, user_id,
+    * ts` plus the `carry` select items) with `gap_us`, `s` adds
+    * `session_id`. Exact integer microseconds, so both engines agree
+    * bit-for-bit. */
+  private def sessionsSql(carry: String = ""): String =
+    s"""g AS (
+      |  SELECT event_id, user_id, ts$carry,
       |    epoch_us(ts) - LAG(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS gap_us
-      |  FROM events)
-      |SELECT event_id, user_id,
-      |  CAST(SUM(CASE WHEN gap_us IS NULL OR gap_us > 1800000000 THEN 1 ELSE 0 END)
+      |  FROM events),
+      |s AS (
+      |  SELECT *, CAST(SUM(CASE WHEN gap_us IS NULL OR gap_us > 1800000000 THEN 1 ELSE 0 END)
       |    OVER (PARTITION BY user_id ORDER BY ts, event_id
       |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-      |FROM g ORDER BY event_id""".stripMargin) { (s, d) =>
-    val order = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    val cum = order.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      |  FROM g)""".stripMargin
+
+  /** x16: gap-based sessionization (the session rule above). One shuffle
+    * (window partition by user). */
+  val sessionize = sql(
+    "x16_ev_sessionize",
+    s"""WITH ${sessionsSql()}
+      |SELECT event_id, user_id, session_id FROM s ORDER BY event_id""".stripMargin) { (s, d) =>
     Tables.events(s, d)
-      .withColumn("gap_us", unix_micros(col("ts")) - lag(unix_micros(col("ts")), 1).over(order))
-      .withColumn("session_id",
-        sum(when(col("gap_us").isNull || col("gap_us") > 1800000000L, 1).otherwise(0)).over(cum))
+      .withColumn("gap_us", sessionGap(unix_micros(col("ts"))))
+      .withColumn("session_id", sessionId)
       .select("event_id", "user_id", "session_id")
       .orderBy("event_id")
   }
@@ -383,29 +404,16 @@ object EventsQueries {
     * sessionized pipeline feeds downstream. */
   val sessionStats = sql(
     "x46_ev_session_stats",
-    """WITH g AS (
-      |  SELECT event_id, user_id, ts,
-      |    epoch_us(ts) - LAG(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS gap_us
-      |  FROM events),
-      |s AS (
-      |  SELECT user_id, epoch_us(ts) AS us,
-      |    CAST(SUM(CASE WHEN gap_us IS NULL OR gap_us > 1800000000 THEN 1 ELSE 0 END)
-      |      OVER (PARTITION BY user_id ORDER BY ts, event_id
-      |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-      |  FROM g)
+    s"""WITH ${sessionsSql(", epoch_us(ts) AS us")}
       |SELECT user_id, session_id,
       |  CAST(COUNT(*) AS BIGINT) AS n_events,
       |  MAX(us) - MIN(us) AS duration_us
       |FROM s GROUP BY user_id, session_id
       |ORDER BY user_id, session_id""".stripMargin) { (s, d) =>
-    val order = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    val cum = order.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     Tables.events(s, d)
       .withColumn("us", unix_micros(col("ts")))
-      .withColumn("gap_us", col("us") - lag(col("us"), 1).over(order))
-      .withColumn("session_id",
-        sum(when(col("gap_us").isNull || col("gap_us") > 1800000000L, 1).otherwise(0))
-          .over(cum).cast("long"))
+      .withColumn("gap_us", sessionGap(col("us")))
+      .withColumn("session_id", sessionId.cast("long"))
       .groupBy("user_id", "session_id")
       .agg(count(lit(1)).as("n_events"), (max("us") - min("us")).as("duration_us"))
       .orderBy("user_id", "session_id")
@@ -471,16 +479,7 @@ object EventsQueries {
     * join, affordable at test scale. */
   val intervalOverlap = sql(
     "x75_ev_interval_overlap",
-    """WITH g AS (
-      |  SELECT event_id, user_id, ts,
-      |    epoch_us(ts) - LAG(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS gap_us
-      |  FROM events),
-      |s AS (
-      |  SELECT user_id, epoch_us(ts) AS us,
-      |    CAST(SUM(CASE WHEN gap_us IS NULL OR gap_us > 1800000000 THEN 1 ELSE 0 END)
-      |      OVER (PARTITION BY user_id ORDER BY ts, event_id
-      |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-      |  FROM g),
+    s"""WITH ${sessionsSql(", epoch_us(ts) AS us")},
       |iv AS (SELECT user_id, session_id, MIN(us) AS lo_us, MAX(us) AS hi_us
       |       FROM s GROUP BY user_id, session_id),
       |a AS (SELECT user_id AS a_user, session_id AS a_session, lo_us, hi_us
@@ -492,14 +491,10 @@ object EventsQueries {
       |  LEAST(hi_us, hi2) - GREATEST(lo_us, lo2) AS overlap_us
       |FROM a JOIN b ON lo_us <= hi2 AND lo2 <= hi_us
       |ORDER BY a_user, a_session, b_user, b_session""".stripMargin) { (s, d) =>
-    val order = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    val cum = order.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val iv = Tables.events(s, d)
       .withColumn("us", unix_micros(col("ts")))
-      .withColumn("gap_us", col("us") - lag(col("us"), 1).over(order))
-      .withColumn("session_id",
-        sum(when(col("gap_us").isNull || col("gap_us") > 1800000000L, 1).otherwise(0))
-          .over(cum).cast("long"))
+      .withColumn("gap_us", sessionGap(col("us")))
+      .withColumn("session_id", sessionId.cast("long"))
       .groupBy("user_id", "session_id")
       .agg(min("us").as("lo_us"), max("us").as("hi_us"))
     val a = iv.filter(col("user_id") % 2 === 0)
@@ -586,10 +581,9 @@ object EventsQueries {
       |       WHEN rn * 20 <= n * 17 THEN 'val'
       |       ELSE 'test' END AS split
       |FROM r ORDER BY event_id""".stripMargin) { (s, d) =>
-    val order = Window.partitionBy("user_id").orderBy("ts", "event_id")
     val whole = Window.partitionBy("user_id")
     Tables.events(s, d)
-      .withColumn("rn", row_number().over(order))
+      .withColumn("rn", row_number().over(byUserTime))
       .withColumn("n", count(lit(1)).over(whole))
       .select(col("event_id"), col("user_id"),
         when(col("rn") * 10 <= col("n") * 7, "train")
@@ -616,15 +610,7 @@ object EventsQueries {
     * order: one exchange, one sort. Exact integer microseconds (x16). */
   val attribution = sql(
     "x78_ev_attribution",
-    """WITH g AS (
-      |  SELECT event_id, user_id, event_type, ts, epoch_us(ts) AS us,
-      |    epoch_us(ts) - LAG(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS gap_us
-      |  FROM events),
-      |s AS (
-      |  SELECT *, CAST(SUM(CASE WHEN gap_us IS NULL OR gap_us > 1800000000 THEN 1 ELSE 0 END)
-      |    OVER (PARTITION BY user_id ORDER BY ts, event_id
-      |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-      |  FROM g),
+    s"""WITH ${sessionsSql(", event_type, epoch_us(ts) AS us")},
       |f AS (
       |  SELECT *, MIN(CASE WHEN event_type = 'view' THEN us END)
       |    OVER (PARTITION BY user_id, session_id ORDER BY ts, event_id
@@ -632,17 +618,13 @@ object EventsQueries {
       |  FROM s)
       |SELECT event_id, user_id, session_id, CAST(us - fv_us AS BIGINT) AS ttc_us
       |FROM f WHERE event_type = 'purchase' ORDER BY event_id""".stripMargin) { (s, d) =>
-    val order = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    val cum = order.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     Tables.events(s, d)
       .withColumn("us", unix_micros(col("ts")))
-      .withColumn("gap_us", col("us") - lag(col("us"), 1).over(order))
-      .withColumn("session_id",
-        sum(when(col("gap_us").isNull || col("gap_us") > 1800000000L, 1).otherwise(0))
-          .over(cum).cast("long"))
+      .withColumn("gap_us", sessionGap(col("us")))
+      .withColumn("session_id", sessionId.cast("long"))
       .withColumn("fv",
         max(when(col("event_type") === "view",
-          struct(col("session_id"), (-col("us")).as("nus")))).over(cum))
+          struct(col("session_id"), (-col("us")).as("nus")))).over(byUserTimeCum))
       .filter(col("event_type") === "purchase")
       .select(col("event_id"), col("user_id"), col("session_id"),
         when(col("fv.session_id") === col("session_id"),
@@ -738,15 +720,7 @@ object EventsQueries {
     * (x45 float stance). */
   val sessionTransitions = sql(
     "x83_ev_transitions",
-    """WITH g AS (
-      |  SELECT event_id, user_id, event_type, ts,
-      |    epoch_us(ts) - LAG(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS gap_us
-      |  FROM events),
-      |s AS (
-      |  SELECT *, CAST(SUM(CASE WHEN gap_us IS NULL OR gap_us > 1800000000 THEN 1 ELSE 0 END)
-      |    OVER (PARTITION BY user_id ORDER BY ts, event_id
-      |          ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS session_id
-      |  FROM g),
+    s"""WITH ${sessionsSql(", event_type")},
       |t AS (
       |  SELECT event_type, session_id,
       |    LEAD(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS next_type,
@@ -759,15 +733,11 @@ object EventsQueries {
       |SELECT prev_type, next_type, CAST(n AS BIGINT) AS n,
       |  CAST(n AS DOUBLE) / SUM(n) OVER (PARTITION BY prev_type) AS p
       |FROM c ORDER BY prev_type, next_type""".stripMargin) { (s, d) =>
-    val order = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    val cum = order.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val c = Tables.events(s, d)
-      .withColumn("gap_us", unix_micros(col("ts")) - lag(unix_micros(col("ts")), 1).over(order))
-      .withColumn("session_id",
-        sum(when(col("gap_us").isNull || col("gap_us") > 1800000000L, 1).otherwise(0))
-          .over(cum).cast("long"))
-      .withColumn("next_type", lead(col("event_type"), 1).over(order))
-      .withColumn("next_session", lead(col("session_id"), 1).over(order))
+      .withColumn("gap_us", sessionGap(unix_micros(col("ts"))))
+      .withColumn("session_id", sessionId.cast("long"))
+      .withColumn("next_type", lead(col("event_type"), 1).over(byUserTime))
+      .withColumn("next_session", lead(col("session_id"), 1).over(byUserTime))
       .filter(col("next_type").isNotNull && col("next_session") === col("session_id"))
       .groupBy(col("event_type").as("prev_type"), col("next_type"))
       .agg(count(lit(1)).as("n"))
@@ -1038,14 +1008,12 @@ object EventsQueries {
       |                + (CASE WHEN lag3 IS NULL THEN 0 ELSE 1 END))), 6)
       |  END AS rmean3
       |FROM l ORDER BY event_id""".stripMargin) { (s, d) =>
-    val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    def cents(c: org.apache.spark.sql.Column) =
-      coalesce(round(c * 100).cast("long"), lit(0L))
-    def present(c: org.apache.spark.sql.Column) = when(c.isNull, 0).otherwise(1)
+    def cents(c: Column) = coalesce(round(c * 100).cast("long"), lit(0L))
+    def present(c: Column) = when(c.isNull, 0).otherwise(1)
     Tables.events(s, d)
-      .withColumn("lag1", lag(col("value"), 1).over(w))
-      .withColumn("lag2", lag(col("value"), 2).over(w))
-      .withColumn("lag3", lag(col("value"), 3).over(w))
+      .withColumn("lag1", lag(col("value"), 1).over(byUserTime))
+      .withColumn("lag2", lag(col("value"), 2).over(byUserTime))
+      .withColumn("lag3", lag(col("value"), 3).over(byUserTime))
       .select(col("event_id"), col("user_id"), col("lag1"), col("lag2"), col("lag3"),
         when(col("lag1").isNull, lit(null)).otherwise(
           round((cents(col("lag1")) + cents(col("lag2")) + cents(col("lag3")))
@@ -1170,14 +1138,7 @@ object EventsQueries {
     * is |types| rows. */
   val cooccurrence = sql(
     "x98_ev_cooccurrence",
-    """WITH g AS (SELECT user_id, ts, event_id, event_type,
-      |    epoch_us(ts) - LAG(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS gap_us
-      |  FROM events),
-      |s AS (SELECT user_id, event_type,
-      |    SUM(CASE WHEN gap_us IS NULL OR gap_us > 1800000000 THEN 1 ELSE 0 END)
-      |      OVER (PARTITION BY user_id ORDER BY ts, event_id
-      |            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS session_id
-      |  FROM g),
+    s"""WITH ${sessionsSql(", event_type")},
       |bt AS (SELECT DISTINCT user_id, session_id, event_type FROM s),
       |nb AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_baskets
       |  FROM (SELECT DISTINCT user_id, session_id FROM bt) b0),
@@ -1193,12 +1154,9 @@ object EventsQueries {
       |FROM pp JOIN ca ca1 ON ca1.event_type = pp.type_a
       |  JOIN ca ca2 ON ca2.event_type = pp.type_b CROSS JOIN nb
       |ORDER BY type_a, type_b""".stripMargin) { (s, d) =>
-    val order = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    val cum = order.rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val bt = Tables.events(s, d)
-      .withColumn("gap_us", unix_micros(col("ts")) - lag(unix_micros(col("ts")), 1).over(order))
-      .withColumn("session_id",
-        sum(when(col("gap_us").isNull || col("gap_us") > 1800000000L, 1).otherwise(0)).over(cum))
+      .withColumn("gap_us", sessionGap(unix_micros(col("ts"))))
+      .withColumn("session_id", sessionId)
       .select("user_id", "session_id", "event_type")
       .distinct()
       .localCheckpoint(eager = false) // four consumers below

@@ -32,6 +32,37 @@ object SimilarityQueries {
 
   private def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
+  /** DuckDB twin of `round(cosine(a, b), 6)` over two 64-dim list
+    * expressions: the same sequential folds, so oracle cosines hash-match. */
+  private def cosSql(a: String, b: String): String =
+    s"ROUND(list_sum(list_transform(range(1, 65), i -> CAST($a[i] AS DOUBLE) * CAST($b[i] AS DOUBLE)))" +
+      s" / (sqrt(list_sum(list_transform($a, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))" +
+      s" * sqrt(list_sum(list_transform($b, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))), 6)"
+
+  /** The ranked top-k every exact and ANN probe ends in, over candidate
+    * (q_id, vec_id, embedding, q_emb) pairs: the cosine rounded to 6 dp,
+    * ranked (cos desc, vec_id) per query. Ranking on the ROUNDED cosine
+    * lets both engines rank identical values (the raw double could flip
+    * neighbors that differ past the 6th decimal). [[top5Sql]] is the
+    * oracle side. */
+  private def cosTopk(cand: DataFrame, k: Int = 5): DataFrame =
+    cand.withColumn("cos", round(cosine(col("embedding"), col("q_emb")), 6))
+      .withColumn("rank", row_number().over(
+        Window.partitionBy("q_id").orderBy(desc("cos"), col("vec_id"))))
+      .filter(col("rank") <= k)
+      .select("q_id", "vec_id", "cos", "rank")
+      .orderBy("q_id", "rank")
+
+  /** Oracle side of [[cosTopk]] at k = 5, over a (q_id, vec_id, cos) CTE:
+    * the `ranked` CTE and the final SELECT. */
+  private def top5Sql(scored: String): String =
+    s"""ranked AS (
+      |  SELECT q_id, vec_id, cos,
+      |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rank
+      |  FROM $scored)
+      |SELECT q_id, vec_id, cos, CAST(rank AS INTEGER) AS rank
+      |FROM ranked WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin
+
   /** L2 norm per vector (oracle-checked: deterministic sequential fold in
     * both engines). */
   val embNorm = sql(
@@ -49,13 +80,8 @@ object SimilarityQueries {
   /** Cosine between consecutive ids — oracle-checked pairwise kernel. */
   val embPairCosine = sql(
     "x11_emb_pair_cosine",
-    """SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-      |  ROUND(
-      |    list_sum(list_transform(range(1, 65),
-      |      i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))
-      |    / (sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-      |       * sqrt(list_sum(list_transform(b.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-      |  6) AS cos
+    s"""SELECT a.vec_id AS id_a, b.vec_id AS id_b,
+      |  ${cosSql("a.embedding", "b.embedding")} AS cos
       |FROM embeddings a JOIN embeddings b ON b.vec_id = a.vec_id + 1
       |ORDER BY id_a""".stripMargin) { (s, d) =>
     val emb = Tables.embeddings(s, d)
@@ -70,40 +96,19 @@ object SimilarityQueries {
   /** Brute-force cosine top-k: the exact baseline. Query set (vec_id < 10)
     * broadcast against the corpus; per-query ranking via window. At cluster
     * scale this is one corpus scan per query batch — the right exact plan.
-    *
-    * Oracle-checked: ranking is on the ROUNDED cosine (6 dp, vec_id
-    * tiebreak) so both engines rank identical values — ranking on the raw
-    * double could flip neighbors that differ only past the 6th decimal.
-    */
+    * Oracle-checked through [[cosTopk]]'s rounded-cosine ranking. */
   val simBruteTopk = sql(
     "x12_sim_brute_topk",
-    """WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id < 10),
+    s"""WITH q AS (SELECT vec_id AS q_id, embedding AS q_emb FROM embeddings WHERE vec_id < 10),
       |scored AS (
       |  SELECT q.q_id, e.vec_id,
-      |    ROUND(
-      |      list_sum(list_transform(range(1, 65),
-      |        i -> CAST(e.embedding[i] AS DOUBLE) * CAST(q.q_emb[i] AS DOUBLE)))
-      |      / (sqrt(list_sum(list_transform(e.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-      |         * sqrt(list_sum(list_transform(q.q_emb, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-      |    6) AS cos
+      |    ${cosSql("e.embedding", "q.q_emb")} AS cos
       |  FROM embeddings e CROSS JOIN q WHERE e.vec_id <> q.q_id),
-      |ranked AS (
-      |  SELECT q_id, vec_id, cos,
-      |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rank
-      |  FROM scored)
-      |SELECT q_id, vec_id, cos, CAST(rank AS INTEGER) AS rank
-      |FROM ranked WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin) { (s, d) =>
+      |${top5Sql("scored")}""".stripMargin) { (s, d) =>
     val emb = Tables.embeddings(s, d)
     val queries = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"))
-    val w = Window.partitionBy("q_id").orderBy(desc("cos"), col("vec_id"))
-    emb.crossJoin(broadcast(queries))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos", round(cosine(col("embedding"), col("q_emb")), 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
-      .select("q_id", "vec_id", "cos", "rank")
-      .orderBy("q_id", "rank")
+    cosTopk(emb.crossJoin(broadcast(queries)).filter(col("vec_id") =!= col("q_id")))
   }
 
   /** Deterministic ±1 hyperplanes from a fixed LCG (no RNG state) — embedded
@@ -157,19 +162,9 @@ object SimilarityQueries {
       |  FROM c WHERE vec_id < 10),
       |scored AS (
       |  SELECT p.q_id, c.vec_id,
-      |    ROUND(
-      |      list_sum(list_transform(range(1, 65),
-      |        i -> CAST(c.embedding[i] AS DOUBLE) * CAST(p.q_emb[i] AS DOUBLE)))
-      |      / (sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-      |         * sqrt(list_sum(list_transform(p.q_emb, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-      |    6) AS cos
+      |    ${cosSql("c.embedding", "p.q_emb")} AS cos
       |  FROM c JOIN probes p USING (bucket) WHERE c.vec_id <> p.q_id),
-      |ranked AS (
-      |  SELECT q_id, vec_id, cos,
-      |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rank
-      |  FROM scored)
-      |SELECT q_id, vec_id, cos, CAST(rank AS INTEGER) AS rank
-      |FROM ranked WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin
+      |${top5Sql("scored")}""".stripMargin
   }
 
   val simLshTopk = sql("x13_sim_lsh_topk", lshOracle) { (s, d) =>
@@ -184,14 +179,7 @@ object SimilarityQueries {
     val queries = emb.filter(col("vec_id") < 10)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         explode(array(probes: _*)).as("bucket"))
-    val w = Window.partitionBy("q_id").orderBy(desc("cos"), col("vec_id"))
-    emb.join(broadcast(queries), Seq("bucket"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos", round(cosine(col("embedding"), col("q_emb")), 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
-      .select("q_id", "vec_id", "cos", "rank")
-      .orderBy("q_id", "rank")
+    cosTopk(emb.join(broadcast(queries), Seq("bucket")).filter(col("vec_id") =!= col("q_id")))
   }
 
   /** IVF index build: KMeans over the corpus, memoized per sf directory.
@@ -345,14 +333,7 @@ object SimilarityQueries {
     val queries = emb.filter(isQuery)
       .select(col("vec_id").as("q_id"), col("embedding").as("q_emb"),
         explode(nearestCells(col("embedding"), nProbe)).as("cell"))
-    val w = Window.partitionBy("q_id").orderBy(desc("cos"), col("vec_id"))
-    corpus.join(broadcast(queries), Seq("cell"))
-      .filter(col("vec_id") =!= col("q_id"))
-      .withColumn("cos", round(cosine(col("embedding"), col("q_emb")), 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select("q_id", "vec_id", "cos", "rank")
-      .orderBy("q_id", "rank")
+    cosTopk(corpus.join(broadcast(queries), Seq("cell")).filter(col("vec_id") =!= col("q_id")), k)
   }
 
   /** DuckDB replication of the x17 IVF probe from the PINNED centroids
@@ -370,16 +351,21 @@ object SimilarityQueries {
   private def fmtD(x: Double): String =
     String.format(java.util.Locale.ROOT, "%.17e", Double.box(x))
   private val x17NProbe = 8
-  /** The pinned centroids as a DuckDB VALUES table (cell, |c|², centroid) —
-    * shared by the x17 and x65 oracles so both replicate the same index. */
+  /** The pinned centroids as DuckDB VALUES rows (cell, |c|², centroid). */
   private lazy val ivfCtRows: String = IvfPinned.centroids.zipWithIndex.map { case (c, i) =>
     val cn2 = c.map(x => x * x).sum
     s"($i, ${fmtD(cn2)}, ${c.map(fmtD).mkString("[", ",", "]")})"
   }.mkString(",\n")
-  private val x17Oracle: String = {
-    val rows = ivfCtRows
+
+  /** The pinned-IVF chain every IVF oracle leads with, kept as one exact
+    * text so diffcheck's prefix cache evaluates it once for all of them:
+    * `ct` the pinned centroids, `scores` the IVF score cn2 − 2·(x·c) of every
+    * (vector, cell), `assign` each vector's nearest cell (ties to the lower
+    * cell), and `probes` each query's (vec_id < 10) [[x17NProbe]] nearest
+    * cells with their 1-based probe rank `pos`. Ends on a CTE boundary. */
+  private lazy val ivfChainSql: String =
     s"""WITH ct(cell, cn2, centroid) AS (VALUES
-      |$rows),
+      |$ivfCtRows),
       |scores AS (
       |  SELECT e.vec_id, ct.cell,
       |    ct.cn2 - 2.0 * list_sum(list_transform(range(1, 65),
@@ -390,28 +376,20 @@ object SimilarityQueries {
       |    SELECT vec_id, cell, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
       |    FROM scores) s WHERE rn = 1),
       |probes AS (
-      |  SELECT vec_id AS q_id, cell FROM (
+      |  SELECT vec_id AS q_id, cell, CAST(rn AS INTEGER) AS pos FROM (
       |    SELECT vec_id, cell, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
       |    FROM scores WHERE vec_id < 10) s WHERE rn <= $x17NProbe),
-      |scored AS (
+      |""".stripMargin
+
+  private val x17Oracle: String = ivfChainSql +
+    s"""scored AS (
       |  SELECT p.q_id, a.vec_id,
-      |    ROUND(
-      |      list_sum(list_transform(range(1, 65),
-      |        i -> CAST(ec.embedding[i] AS DOUBLE) * CAST(eq.embedding[i] AS DOUBLE)))
-      |      / (sqrt(list_sum(list_transform(ec.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-      |         * sqrt(list_sum(list_transform(eq.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-      |    6) AS cos
+      |    ${cosSql("ec.embedding", "eq.embedding")} AS cos
       |  FROM assign a JOIN probes p USING (cell)
       |  JOIN embeddings ec ON ec.vec_id = a.vec_id
       |  JOIN embeddings eq ON eq.vec_id = p.q_id
       |  WHERE a.vec_id <> p.q_id),
-      |ranked AS (
-      |  SELECT q_id, vec_id, cos,
-      |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rank
-      |  FROM scored)
-      |SELECT q_id, vec_id, cos, CAST(rank AS INTEGER) AS rank
-      |FROM ranked WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin
-  }
+      |${top5Sql("scored")}""".stripMargin
 
   /** x17: the IVF probe on the testdata corpus, from the PINNED index
     * (train-once-probe-forever — the artifact contract every real IVF
@@ -432,20 +410,9 @@ object SimilarityQueries {
     * table and k=1 assignment arithmetic as x17, then plain grouped
     * counting — the assignment is the only float-bearing step and it is
     * bit-identical by the x17 precedent; everything downstream is integer. */
-  private val x65Oracle: String = {
-    val rows = ivfCtRows
-    s"""WITH ct(cell, cn2, centroid) AS (VALUES
-      |$rows),
-      |scores AS (
-      |  SELECT e.vec_id, e.label, ct.cell,
-      |    ct.cn2 - 2.0 * list_sum(list_transform(range(1, 65),
-      |      i -> CAST(e.embedding[i] AS DOUBLE) * ct.centroid[i])) AS d
-      |  FROM embeddings e CROSS JOIN ct),
-      |assign AS (
-      |  SELECT label, cell FROM (
-      |    SELECT label, cell, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
-      |    FROM scores) s WHERE rn = 1),
-      |lc AS (SELECT cell, label, COUNT(*) AS n FROM assign GROUP BY cell, label),
+  private val x65Oracle: String = ivfChainSql +
+    """lc AS (SELECT a.cell, e.label, COUNT(*) AS n
+      |  FROM assign a JOIN embeddings e USING (vec_id) GROUP BY a.cell, e.label),
       |tot AS (SELECT cell, CAST(SUM(n) AS BIGINT) AS n_vecs,
       |  CAST(COUNT(*) AS BIGINT) AS n_labels FROM lc GROUP BY cell),
       |maj AS (SELECT cell, label AS maj_label, CAST(n AS BIGINT) AS maj_n FROM (
@@ -455,7 +422,6 @@ object SimilarityQueries {
       |SELECT t.cell, t.n_vecs, t.n_labels, m.maj_label, m.maj_n,
       |  CAST(m.maj_n AS DOUBLE) / t.n_vecs AS purity
       |FROM tot t JOIN maj m USING (cell) ORDER BY cell""".stripMargin
-  }
 
   /** x65: corpus TOPIC DISTRIBUTION over the pinned IVF index — assign
     * every vector to its nearest cell (the same k=1 literal-centroid argmin
@@ -530,20 +496,8 @@ object SimilarityQueries {
     * before the floor division so both engines divide non-negative
     * operands (cos can be negative; `div` vs `//` need not agree on
     * negative dividends). */
-  private val x145Oracle: String = {
-    val rows = ivfCtRows
-    s"""WITH ct(cell, cn2, centroid) AS (VALUES
-      |$rows),
-      |scores AS (
-      |  SELECT e.vec_id, ct.cell,
-      |    ct.cn2 - 2.0 * list_sum(list_transform(range(1, 65),
-      |      i -> CAST(e.embedding[i] AS DOUBLE) * ct.centroid[i])) AS d
-      |  FROM embeddings e CROSS JOIN ct),
-      |assign AS (
-      |  SELECT vec_id, cell FROM (
-      |    SELECT vec_id, cell, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
-      |    FROM scores) s WHERE rn = 1),
-      |cosv AS (
+  private val x145Oracle: String = ivfChainSql +
+    s"""cosv AS (
       |  SELECT a.cell,
       |    CAST(ROUND(
       |      list_sum(list_transform(range(1, 65),
@@ -558,7 +512,6 @@ object SimilarityQueries {
       |  CAST(SUM(CASE WHEN cos_ppm < $outlierTauPpm THEN 1 ELSE 0 END) * 1000000
       |       // COUNT(*) AS BIGINT) AS outlier_ppm
       |FROM cosv GROUP BY cell ORDER BY cell""".stripMargin
-  }
 
   /** x145: per-cell embedding OUTLIER census over the pinned IVF index —
     * the embedding-QUALITY read that completes the index-health triptych:
@@ -626,15 +579,10 @@ object SimilarityQueries {
     * duplicates; max pairwise cosine ≈ 0.51). */
   val dedupEmbedding = sql(
     "x20_dedup_embedding",
-    """WITH m AS (SELECT max(vec_id) AS mx FROM embeddings),
+    s"""WITH m AS (SELECT max(vec_id) AS mx FROM embeddings),
       |b AS (SELECT vec_id AS id_b, embedding AS eb FROM embeddings, m WHERE vec_id > mx - 50),
       |p AS (SELECT a.vec_id AS id_a, id_b,
-      |  ROUND(
-      |    list_sum(list_transform(range(1, 65),
-      |      i -> CAST(a.embedding[i] AS DOUBLE) * CAST(eb[i] AS DOUBLE)))
-      |    / (sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-      |       * sqrt(list_sum(list_transform(eb, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-      |  6) AS cos
+      |  ${cosSql("a.embedding", "eb")} AS cos
       |  FROM embeddings a JOIN b ON a.vec_id < id_b)
       |SELECT id_a, id_b, cos FROM p WHERE cos >= 0.30 ORDER BY id_a, id_b""".stripMargin) { (s, d) =>
     // Norms are per-ROW, so compute them before the pair join — one fold per
@@ -725,12 +673,7 @@ object SimilarityQueries {
       |  WHERE l.vec_id < r.vec_id),
       |p AS (
       |  SELECT id_a, id_b,
-      |    ROUND(
-      |      list_sum(list_transform(range(1, 65),
-      |        i -> CAST(a.embedding[i] AS DOUBLE) * CAST(bb.embedding[i] AS DOUBLE)))
-      |      / (sqrt(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-      |         * sqrt(list_sum(list_transform(bb.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-      |    6) AS cos
+      |    ${cosSql("a.embedding", "bb.embedding")} AS cos
       |  FROM cand
       |  JOIN embeddings a ON a.vec_id = cand.id_a
       |  JOIN embeddings bb ON bb.vec_id = cand.id_b)
@@ -793,16 +736,11 @@ object SimilarityQueries {
     * the ROUNDED cosine so both engines compare identical values. */
   val simContamination = sql(
     "x39_sim_contamination",
-    """WITH bench AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 50 = 0),
+    s"""WITH bench AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 50 = 0),
       |corp AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 50 <> 0),
       |scored AS (
       |  SELECT c.vec_id, b.vec_id AS bench_id,
-      |    ROUND(
-      |      list_sum(list_transform(range(1, 65),
-      |        i -> CAST(c.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE)))
-      |      / (sqrt(list_sum(list_transform(c.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-      |         * sqrt(list_sum(list_transform(b.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-      |    6) AS cos
+      |    ${cosSql("c.embedding", "b.embedding")} AS cos
       |  FROM corp c CROSS JOIN bench b)
       |SELECT vec_id, CAST(COUNT(*) AS BIGINT) AS n_hits, MAX(cos) AS max_cos
       |FROM scored WHERE cos >= 0.30
@@ -860,24 +798,9 @@ object SimilarityQueries {
     * `list_sum` — a deterministic left fold matching the engine's
     * sequential `aggregate` over the code array (a bare SUM() would leave
     * the float addition order to the planner). */
-  private val x68Oracle: String = {
-    s"""WITH ct(cell, cn2, centroid) AS (VALUES
-      |$ivfCtRows),
-      |cb(s, code, cn2, centroid) AS (VALUES
+  private val x68Oracle: String = ivfChainSql +
+    s"""cb(s, code, cn2, centroid) AS (VALUES
       |$pqCbRows),
-      |scores AS (
-      |  SELECT e.vec_id, ct.cell,
-      |    ct.cn2 - 2.0 * list_sum(list_transform(range(1, 65),
-      |      i -> CAST(e.embedding[i] AS DOUBLE) * ct.centroid[i])) AS d
-      |  FROM embeddings e CROSS JOIN ct),
-      |assign AS (
-      |  SELECT vec_id, cell FROM (
-      |    SELECT vec_id, cell, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
-      |    FROM scores) s WHERE rn = 1),
-      |probes AS (
-      |  SELECT vec_id AS q_id, cell FROM (
-      |    SELECT vec_id, cell, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
-      |    FROM scores WHERE vec_id < 10) s WHERE rn <= $x17NProbe),
       |subscores AS (
       |  SELECT e.vec_id, cb.s, cb.code,
       |    cb.cn2 - 2.0 * list_sum(list_transform(range(1, ${PqPinned.subDim + 1}),
@@ -907,21 +830,10 @@ object SimilarityQueries {
       |    FROM adc) z WHERE rn <= $pqShortlist),
       |rer AS (
       |  SELECT sl.q_id, sl.vec_id,
-      |    ROUND(
-      |      list_sum(list_transform(range(1, 65),
-      |        i -> CAST(ec.embedding[i] AS DOUBLE) * CAST(eq.embedding[i] AS DOUBLE)))
-      |      / (sqrt(list_sum(list_transform(ec.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-      |         * sqrt(list_sum(list_transform(eq.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-      |    6) AS cos
+      |    ${cosSql("ec.embedding", "eq.embedding")} AS cos
       |  FROM shortlist sl JOIN embeddings ec ON ec.vec_id = sl.vec_id
       |  JOIN embeddings eq ON eq.vec_id = sl.q_id),
-      |ranked AS (
-      |  SELECT q_id, vec_id, cos,
-      |    ROW_NUMBER() OVER (PARTITION BY q_id ORDER BY cos DESC, vec_id) AS rank
-      |  FROM rer)
-      |SELECT q_id, vec_id, cos, CAST(rank AS INTEGER) AS rank
-      |FROM ranked WHERE rank <= 5 ORDER BY q_id, rank""".stripMargin
-  }
+      |${top5Sql("rer")}""".stripMargin
 
   /** x68: IVF-PQ top-k — the compressed-vector end state of the ANN ladder
     * (x12 exact scan → x13 LSH buckets → x17 IVF cells → this). Corpus
@@ -1008,14 +920,7 @@ object SimilarityQueries {
     val shortlist = pqShortlistOf(pqCorpusCodes(emb), qExact)
       .select("q_id", "vec_id")
     // exact rerank: full vectors touch only the ≤ queries×shortlist rows
-    val w = Window.partitionBy("q_id").orderBy(desc("cos"), col("vec_id"))
-    emb.join(broadcast(shortlist), Seq("vec_id"))
-      .join(broadcast(qExact), Seq("q_id"))
-      .withColumn("cos", round(cosine(col("embedding"), col("q_emb")), 6))
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= 5)
-      .select("q_id", "vec_id", "cos", "rank")
-      .orderBy("q_id", "rank")
+    cosTopk(emb.join(broadcast(shortlist), Seq("vec_id")).join(broadcast(qExact), Seq("q_id")))
   }
 
   /** SemDeDup duplicate threshold — same τ as x20/x21 (the shipped corpus
@@ -1029,26 +934,10 @@ object SimilarityQueries {
     * threshold flag. Every float step reuses an already-hash-proven
     * arithmetic chain (assignment = x17/x65, cosine = x20/x21, round-then-
     * max = x39's precedent). */
-  private val x67Oracle: String = {
-    s"""WITH ct(cell, cn2, centroid) AS (VALUES
-      |$ivfCtRows),
-      |scores AS (
-      |  SELECT e.vec_id, ct.cell,
-      |    ct.cn2 - 2.0 * list_sum(list_transform(range(1, 65),
-      |      i -> CAST(e.embedding[i] AS DOUBLE) * ct.centroid[i])) AS d
-      |  FROM embeddings e CROSS JOIN ct),
-      |assign AS (
-      |  SELECT vec_id, cell FROM (
-      |    SELECT vec_id, cell, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
-      |    FROM scores) s WHERE rn = 1),
-      |pairs AS (
+  private val x67Oracle: String = ivfChainSql +
+    s"""pairs AS (
       |  SELECT lb.vec_id AS id_b,
-      |    ROUND(
-      |      list_sum(list_transform(range(1, 65),
-      |        i -> CAST(ea.embedding[i] AS DOUBLE) * CAST(eb.embedding[i] AS DOUBLE)))
-      |      / (sqrt(list_sum(list_transform(ea.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-      |         * sqrt(list_sum(list_transform(eb.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-      |    6) AS cos
+      |    ${cosSql("ea.embedding", "eb.embedding")} AS cos
       |  FROM assign la JOIN assign lb ON la.cell = lb.cell AND la.vec_id < lb.vec_id
       |  JOIN embeddings ea ON ea.vec_id = la.vec_id
       |  JOIN embeddings eb ON eb.vec_id = lb.vec_id),
@@ -1058,7 +947,6 @@ object SimilarityQueries {
       |  CAST(CASE WHEN COALESCE(m.m, -1.0) >= $x67Tau THEN 1 ELSE 0 END AS INT) AS is_dup
       |FROM assign a LEFT JOIN mx m ON m.vec_id = a.vec_id
       |ORDER BY a.vec_id""".stripMargin
-  }
 
   /** x67: SemDeDup — semantic dedup scoped to the pinned IVF cells
     * (Abbas et al. 2023: cluster the corpus, compare pairs only WITHIN a
@@ -1247,38 +1135,17 @@ FROM embeddings ORDER BY vec_id""") { (s, d) =>
       .orderBy("label")
   }
 
-  /** DuckDB replication of the x126 sweep: the SAME ct/scores/assign chain
-    * as x17/x65 (prefix-cache-groupable), probes kept WITH their rank so
-    * each nprobe's candidate set is `rn <= nprobe`, exact top-5 by x12's
+  /** DuckDB replication of the x126 sweep: the shared [[ivfChainSql]],
+    * whose probe rank `pos` makes each nprobe's candidate set
+    * `pos <= nprobe`, exact top-5 by x12's
     * brute recipe, LEFT join so a zero-recall rung still emits its row.
     * Ends in a `sweep` CTE so x127's operating-point oracle extends the
     * SAME chain instead of duplicating it. */
-  private val x126SweepChain: String = {
-    val rows = ivfCtRows
-    s"""WITH ct(cell, cn2, centroid) AS (VALUES
-      |$rows),
-      |scores AS (
-      |  SELECT e.vec_id, ct.cell,
-      |    ct.cn2 - 2.0 * list_sum(list_transform(range(1, 65),
-      |      i -> CAST(e.embedding[i] AS DOUBLE) * ct.centroid[i])) AS d
-      |  FROM embeddings e CROSS JOIN ct),
-      |assign AS (
-      |  SELECT vec_id, cell FROM (
-      |    SELECT vec_id, cell, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
-      |    FROM scores) s WHERE rn = 1),
-      |probes AS (
-      |  SELECT vec_id AS q_id, cell, CAST(rn AS INTEGER) AS pos FROM (
-      |    SELECT vec_id, cell, ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d, cell) AS rn
-      |    FROM scores WHERE vec_id < 10) s WHERE rn <= 8),
-      |np(nprobe) AS (VALUES (1), (2), (4), (8)),
+  private val x126SweepChain: String = ivfChainSql +
+    s"""np(nprobe) AS (VALUES (1), (2), (4), (8)),
       |cand AS (
       |  SELECT p.q_id, a.vec_id, p.pos,
-      |    ROUND(
-      |      list_sum(list_transform(range(1, 65),
-      |        i -> CAST(ec.embedding[i] AS DOUBLE) * CAST(eq.embedding[i] AS DOUBLE)))
-      |      / (sqrt(list_sum(list_transform(ec.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-      |         * sqrt(list_sum(list_transform(eq.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-      |    6) AS cos
+      |    ${cosSql("ec.embedding", "eq.embedding")} AS cos
       |  FROM assign a JOIN probes p USING (cell)
       |  JOIN embeddings ec ON ec.vec_id = a.vec_id
       |  JOIN embeddings eq ON eq.vec_id = p.q_id
@@ -1289,12 +1156,7 @@ FROM embeddings ORDER BY vec_id""") { (s, d) =>
       |    FROM cand c JOIN np ON c.pos <= np.nprobe) r WHERE rank <= 5),
       |ex5 AS (SELECT q_id, vec_id FROM (
       |    SELECT eq.vec_id AS q_id, ec.vec_id,
-      |      ROW_NUMBER() OVER (PARTITION BY eq.vec_id ORDER BY ROUND(
-      |        list_sum(list_transform(range(1, 65),
-      |          i -> CAST(ec.embedding[i] AS DOUBLE) * CAST(eq.embedding[i] AS DOUBLE)))
-      |        / (sqrt(list_sum(list_transform(ec.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))
-      |           * sqrt(list_sum(list_transform(eq.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))))),
-      |      6) DESC, ec.vec_id) AS rank
+      |      ROW_NUMBER() OVER (PARTITION BY eq.vec_id ORDER BY ${cosSql("ec.embedding", "eq.embedding")} DESC, ec.vec_id) AS rank
       |    FROM embeddings eq JOIN embeddings ec ON ec.vec_id <> eq.vec_id
       |    WHERE eq.vec_id < 10) r WHERE rank <= 5),
       |nq AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_queries FROM embeddings WHERE vec_id < 10),
@@ -1307,7 +1169,6 @@ FROM embeddings ORDER BY vec_id""") { (s, d) =>
       |             JOIN ex5 e ON e.q_id = i.q_id AND e.vec_id = i.vec_id) h
       |    ON h.nprobe = np.nprobe
       |  GROUP BY np.nprobe, nq.n_queries)""".stripMargin
-  }
 
   private val x126Oracle: String = x126SweepChain +
     "\nSELECT nprobe, n_queries, n_hits, recall_ppm FROM sweep ORDER BY nprobe"

@@ -538,34 +538,6 @@ object TextQueries {
       .select(col("doc_id"), coalesce(col("rep"), col("doc_id")).as("rep"))
   }
 
-  /** Hierarchical corpus dedup (x26): verified near-dup pairs (x03's
-    * band+verify plan) → connected components → ONE MinHash signature per
-    * cluster via the MinHashUnion typed aggregator (element-wise min of
-    * member signatures ≡ the signature of the union of member shingle
-    * sets — tiny fixed merge state, ClusterDedupSpec proves the identity) →
-    * a banded cross-CLUSTER candidate pass over cluster signatures. This is
-    * the real corpus-dedup shape at 100 TB: pairwise work stays
-    * band-bounded, cluster growth costs one k-long array per group, and
-    * the cross-cluster pass finds chains the pair threshold split without
-    * ever touching shingle sets again. Output: one row per cluster
-    * (rep, n_docs, n_xcands = plausible cross-cluster merge candidates at
-    * estimated Jaccard ≥ 0.25 from signature agreement). */
-  /** Shared front half of x26 and x51: signature table (GC-scoped
-    * boundary), verified pairs, and the hash-min CC labels over them — ONE
-    * definition so the threshold and the closure can never drift between
-    * the cluster view and the apply step. */
-  private def sigsAndLabels(s: SparkSession, d: String): (DataFrame, DataFrame) =
-    sigsAndLabelsOf(docs(s, d))
-
-  /** Same over any (doc_id, text) frame — x59 runs it on the
-    * quality-gated subset. */
-  private def sigsAndLabelsOf(dd: DataFrame): (DataFrame, DataFrame) = {
-    val sigs = minhashSignaturesOf(dd).localCheckpoint(eager = false)
-    val pairs = minhashPairs(sigs).select("doc_a", "doc_b")
-      .localCheckpoint(eager = false)
-    (sigs, connectedReps(sigs.select("doc_id"), pairs))
-  }
-
   /** r21 OPTIMIZATION (guide §2.4): every doc→cluster chain consumer used
     * to pay TWO corpus-payload (h, len) exchanges over the same frame —
     * [[exactCollapse]]'s groupBy (inside [[minhashSignaturesOf]], for the
@@ -593,12 +565,13 @@ object TextQueries {
       .select(col("doc_id"), col("e_rep"),
         when(col("doc_id") === col("e_rep"), col("text")).as("rep_text"))
 
-  /** The doc→near-dup-cluster chain (doc_id, rep) plus the per-doc
-    * exact-rep frame (doc_id, e_rep) — the one-shuffle form of the
-    * sigsAndLabels + docExactRep pair (see [[erepFrameOf]]), shared by
-    * x51/x55/x58/x104/x107/x116/x119/x134/x136/x147/x156 and the
-    * manifest family (x59/x108/x118). */
-  private[queries] def chainAndErepOf(dd: DataFrame): (DataFrame, DataFrame) = {
+  /** The one dedup-chain builder over any (doc_id, text) frame: the
+    * checkpointed per-doc exact-rep frame (doc_id, e_rep, rep_text, see
+    * [[erepFrameOf]]), the exact reps' MinHash signature table (doc_id, sh,
+    * sig), and the hash-min CC labels (doc_id, rep) over the reps' verified
+    * near-dup pairs. x26 reads the signatures and labels; [[chainAndErepOf]]
+    * maps every doc to its cluster. */
+  private def erepSigsLabelsOf(dd: DataFrame): (DataFrame, DataFrame, DataFrame) = {
     val erep = erepFrameOf(dd).localCheckpoint(eager = false)
     val sigs = erep.filter(col("doc_id") === col("e_rep"))
       .select(col("doc_id"), expr("graft_shingles(rep_text, 3)").as("sh"))
@@ -606,7 +579,15 @@ object TextQueries {
       .localCheckpoint(eager = false)
     val pairs = minhashPairs(sigs).select("doc_a", "doc_b")
       .localCheckpoint(eager = false)
-    val labels = connectedReps(sigs.select("doc_id"), pairs)
+    (erep, sigs, connectedReps(sigs.select("doc_id"), pairs))
+  }
+
+  /** The doc→near-dup-cluster chain (doc_id, rep) plus the per-doc
+    * exact-rep frame (doc_id, e_rep), shared by
+    * x51/x55/x58/x104/x107/x116/x119/x134/x136/x147/x156 and the
+    * manifest family (x59/x108/x118). */
+  private[queries] def chainAndErepOf(dd: DataFrame): (DataFrame, DataFrame) = {
+    val (erep, _, labels) = erepSigsLabelsOf(dd)
     val chain = erep.select("doc_id", "e_rep")
       .join(labels.withColumnRenamed("doc_id", "e_rep"), Seq("e_rep"))
       .select("doc_id", "rep")
@@ -619,9 +600,21 @@ object TextQueries {
     * result. */
   private[queries] def chainOf(dd: DataFrame): DataFrame = chainAndErepOf(dd)._1
 
+  /** Hierarchical corpus dedup (x26): verified near-dup pairs (x03's
+    * band+verify plan) → connected components → ONE MinHash signature per
+    * cluster via the MinHashUnion typed aggregator (element-wise min of
+    * member signatures ≡ the signature of the union of member shingle
+    * sets — tiny fixed merge state, ClusterDedupSpec proves the identity) →
+    * a banded cross-CLUSTER candidate pass over cluster signatures. This is
+    * the real corpus-dedup shape at 100 TB: pairwise work stays
+    * band-bounded, cluster growth costs one k-long array per group, and
+    * the cross-cluster pass finds chains the pair threshold split without
+    * ever touching shingle sets again. Output: one row per cluster
+    * (rep, n_docs, n_xcands = plausible cross-cluster merge candidates at
+    * estimated Jaccard ≥ 0.25 from signature agreement). */
   val dedupClusters = sql("x26_dedup_clusters", HashOracles.dedupClusters) { (s, d) =>
     val minhashUnion = udaf(new graft.functions.MinHashUnion(32)).withName("graft_minhash_union")
-    val (sigs, labels) = sigsAndLabels(s, d)
+    val (_, sigs, labels) = erepSigsLabelsOf(docs(s, d))
     val clusters = labels.join(sigs, Seq("doc_id"))
       .groupBy("rep")
       .agg(count(lit(1)).as("n_docs"), minhashUnion(col("sig")).as("csig"))
@@ -994,17 +987,9 @@ object TextQueries {
     * same shuffle as the pair join — semantics unchanged. */
   val textLmScore = sql(
     "x62_text_lm_score",
-    """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
-      |bgk AS (SELECT doc_id, unnest(range(2, len(toks)+1)) AS i, toks FROM t),
-      |bg AS (SELECT doc_id, toks[i-1] AS w1, toks[i] AS w2 FROM bgk),
-      |cpair AS (SELECT w1, w2, COUNT(*) AS c2 FROM bg GROUP BY w1, w2),
-      |cctx AS (SELECT w1, COUNT(*) AS c1 FROM bg GROUP BY w1),
-      |px AS (SELECT bg.doc_id,
-      |    CAST(FLOOR(CAST(c2 AS DOUBLE) / c1 * 1000000) AS BIGINT) AS f
-      |  FROM bg JOIN cpair USING (w1, w2) JOIN cctx USING (w1))
-      |SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_trans,
-      |  CAST(SUM(f) AS DOUBLE) / COUNT(*) / 1000000 AS lm_score
-      |FROM px GROUP BY doc_id ORDER BY doc_id""".stripMargin) { (s, d) =>
+    s"""WITH ${lmDocSql()}
+      |SELECT doc_id, n_trans, CAST(sum_f AS DOUBLE) / n_trans / 1000000 AS lm_score
+      |FROM doc ORDER BY doc_id""".stripMargin) { (s, d) =>
     lmScoreOf(docs(s, d)).orderBy("doc_id")
   }
 
@@ -1104,6 +1089,23 @@ object TextQueries {
       .getOrElse(16000000L)
     val cp = df.localCheckpoint(eager = false)
     if (cp.count() <= max) broadcast(cp) else df
+  }
+
+  /** Oracle side of [[lmScoreCore]]: x62's bigram chain as WITH items
+    * ending in `doc(doc_id, carry..., n_trans, sum_f)`, the `carry`
+    * columns of `documents` riding every row as they do in the engine. */
+  private def lmDocSql(carry: String*): String = {
+    val c = carry.map(", " + _).mkString
+    s"""t AS (SELECT doc_id$c, string_split(text, ' ') AS toks FROM documents),
+      |bgk AS (SELECT doc_id$c, unnest(range(2, len(toks)+1)) AS i, toks FROM t),
+      |bg AS (SELECT doc_id$c, toks[i-1] AS w1, toks[i] AS w2 FROM bgk),
+      |cpair AS (SELECT w1, w2, COUNT(*) AS c2 FROM bg GROUP BY w1, w2),
+      |cctx AS (SELECT w1, COUNT(*) AS c1 FROM bg GROUP BY w1),
+      |px AS (SELECT doc_id$c,
+      |    CAST(FLOOR(CAST(c2 AS DOUBLE) / c1 * 1000000) AS BIGINT) AS f
+      |  FROM bg JOIN cpair USING (w1, w2) JOIN cctx USING (w1)),
+      |doc AS (SELECT doc_id$c, CAST(COUNT(*) AS BIGINT) AS n_trans,
+      |    CAST(SUM(f) AS BIGINT) AS sum_f FROM px GROUP BY doc_id$c)""".stripMargin
   }
 
   /** The shared bigram explode over (doc_id[, carry...], text): one row
@@ -1264,7 +1266,7 @@ object TextQueries {
   private def bpeBests(s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) = {
     // corpus-sized stage: one scan -> word counts (partial agg map-side)
     val w0 = docs(s, d)
-      .select(explode(split(trim(col("text")), "\\s+")).as("w"))
+      .select(explode(trimToks).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("n"))
       .select(col("n"),
@@ -1493,7 +1495,7 @@ object TextQueries {
     docsDf
       .crossJoin(mergesDf)
       .select(col("lang"), expr("graft_bpe_tokens(text, merges)").as("toks"),
-        size(split(trim(col("text")), "\\s+")).cast("bigint").as("n_words"))
+        nTokOfText.as("n_words"))
       .filter(size(col("toks")) > 0)
       .groupBy("lang")
       .agg(
@@ -2025,7 +2027,7 @@ object TextQueries {
       .rollup(col("source"))
       .agg(
         count(lit(1)).as("n_docs"),
-        sum(size(split(trim(col("text")), "\\s+")).cast("long")).as("n_tokens"),
+        sum(nTokOfText).as("n_tokens"),
         sum(length(col("text")).cast("long")).as("n_chars"),
         count_distinct(col("lang")).as("n_langs"),
         (sum(length(col("text"))).cast("double") / count(lit(1))).as("mean_chars"))
@@ -2284,21 +2286,10 @@ object TextQueries {
     * two-level decomposition is hash-checked against the direct form. */
   val textMixture = sql(
     "x53_text_mixture",
-    """WITH d AS (SELECT source, doc_id,
-      |    CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n_tok,
-      |    md5(CAST(doc_id AS VARCHAR)) AS ord,
-      |    CASE WHEN source IN ('src0','src1','src2','src3','src4') THEN 1200
-      |         WHEN source IN ('src15','src16','src17','src18','src19') THEN 150
-      |         ELSE 600 END AS quota
-      |  FROM documents),
-      |c AS (SELECT source, doc_id, n_tok, quota,
-      |    CAST(COALESCE(SUM(n_tok) OVER (PARTITION BY source ORDER BY ord, doc_id
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum_before
-      |  FROM d)
+    s"""WITH ${packOffsetsSql(carry = mixtureQuotaSql)}
       |SELECT source, doc_id, n_tok, cum_before FROM c
       |WHERE cum_before < quota ORDER BY source, doc_id""".stripMargin) { (s, d) =>
-    val dd = docs(s, d).select(col("source"), col("doc_id"),
-      size(split(trim(col("text")), "\\s+")).cast("long").as("n_tok"))
+    val dd = docs(s, d).select(col("source"), col("doc_id"), nTokOfText.as("n_tok"))
     graft.operators.PrefixQuota.takeUntilQuota(
       dd, "source",
       orderKey = md5(col("doc_id").cast("string")), tie = col("doc_id"),
@@ -2307,12 +2298,16 @@ object TextQueries {
       .orderBy("source", "doc_id")
   }
 
-  /** Per-source token budget = weight × 600; referenced by x53's engine
-    * side and mirrored as the CASE in its oracle. */
+  /** Per-source token budget = weight × 600: x53's engine side, and its
+    * oracle's `quota` carry. */
   private def mixtureQuota: Column =
     when(col("source").isin("src0", "src1", "src2", "src3", "src4"), 1200L)
       .when(col("source").isin("src15", "src16", "src17", "src18", "src19"), 150L)
       .otherwise(600L)
+  private def mixtureQuotaSql =
+    """, CASE WHEN source IN ('src0','src1','src2','src3','src4') THEN 1200
+      |    WHEN source IN ('src15','src16','src17','src18','src19') THEN 150
+      |    ELSE 600 END AS quota""".stripMargin
 
   /** x54: sequence packing — the pretraining step after mixing: each
     * source's documents are CONCATENATED in the deterministic hash order
@@ -2333,28 +2328,86 @@ object TextQueries {
   private val packSeqLen = 512L
   val textPack = sql(
     "x54_text_pack",
-    """WITH d AS (SELECT source, doc_id,
-      |    CAST(len(string_split_regex(trim(text), '\s+')) AS BIGINT) AS n_tok,
-      |    md5(CAST(doc_id AS VARCHAR)) AS ord
-      |  FROM documents),
-      |c AS (SELECT source, doc_id, n_tok,
-      |    CAST(COALESCE(SUM(n_tok) OVER (PARTITION BY source ORDER BY ord, doc_id
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum_before
-      |  FROM d)
+    s"""WITH ${packOffsetsSql()}
       |SELECT source, doc_id, n_tok,
-      |  CAST(cum_before // 512 AS BIGINT) AS pack_id,
-      |  CAST(cum_before % 512 AS BIGINT) AS pack_offset
+      |  CAST(cum_before // $packSeqLen AS BIGINT) AS pack_id,
+      |  CAST(cum_before % $packSeqLen AS BIGINT) AS pack_offset
       |FROM c ORDER BY source, doc_id""".stripMargin) { (s, d) =>
-    val dd = docs(s, d).select(col("source"), col("doc_id"),
-      size(split(trim(col("text")), "\\s+")).cast("long").as("n_tok"))
-    graft.operators.PrefixQuota.runningBefore(
-      dd, "source",
-      orderKey = md5(col("doc_id").cast("string")), tie = col("doc_id"),
-      value = col("n_tok"))
+    packOffsetsOf(docs(s, d))
       .select(col("source"), col("doc_id"), col("n_tok"),
         expr(s"cum_before div $packSeqLen").as("pack_id"),
         (col("cum_before") % packSeqLen).as("pack_offset"))
       .orderBy("source", "doc_id")
+  }
+
+  /** A doc's tokens for every token-mass count and pack query: its trimmed
+    * text split on `\s+`; `nTokOfText` is their count. */
+  private def trimToks: Column = split(trim(col("text")), "\\s+")
+  private def nTokOfText: Column = size(trimToks).cast("long")
+
+  /** The pack placement rule (x54), engine side: over (source, doc_id,
+    * n_tok, ...) rows, `cum_before` is the number of the source's tokens
+    * placed before the doc when its docs are concatenated in (orderKey,
+    * doc_id) order, md5(doc_id) by default. [[packOffsetsSql]] is the
+    * oracle side. */
+  private def packPlaced(dd: DataFrame,
+      orderKey: Column = md5(col("doc_id").cast("string"))): DataFrame =
+    graft.operators.PrefixQuota.runningBefore(
+      dd, "source", orderKey = orderKey, tie = col("doc_id"), value = col("n_tok"))
+
+  /** [[packPlaced]] over (source, doc_id, text) documents. */
+  private def packOffsetsOf(documents: DataFrame): DataFrame =
+    packPlaced(documents.select(col("source"), col("doc_id"), nTokOfText.as("n_tok")))
+
+  /** One row per (placed doc, pack it touches): `pack_id`, the doc's span
+    * `[span_start, span_start + span_len)` in the pack, and `doc_off`, the
+    * span's first token within the doc. Output is linear: a doc touches
+    * `1 + (cum_before + n_tok - 1) div L - cum_before div L` packs. */
+  private def packSpans(placed: DataFrame): DataFrame = {
+    val L = packSeqLen
+    val lo = greatest(col("cum_before"), col("pack_id") * L)
+    placed
+      .withColumn("pack_id",
+        explode(sequence(expr(s"cum_before div $L"),
+          expr(s"(cum_before + n_tok - 1) div $L"))))
+      .withColumn("span_start", lo - col("pack_id") * L)
+      .withColumn("doc_off", lo - col("cum_before"))
+      .withColumn("span_len",
+        least(col("cum_before") + col("n_tok"), (col("pack_id") + 1) * L) - lo)
+  }
+
+  /** x120/x125's pack input, (source, doc_id, toks, n_tok): the placement
+    * input plus the tokens the packs are assembled from. [[packToksSql]]
+    * is the oracle's `toks` carry. */
+  private def packTokensOf(documents: DataFrame): DataFrame =
+    documents.select(col("source"), col("doc_id"), trimToks.as("toks"))
+      .withColumn("n_tok", size(col("toks")).cast("long"))
+  private def packToksSql = ", string_split_regex(trim(text), '\\s+') AS toks"
+
+  /** The pack placement rule, oracle side, as WITH items: `d` is the
+    * (source, doc_id, `carry` select items, n_tok, ord) rows of `from`,
+    * `c` adds cum_before, `e` explodes one row per (doc, pack_id), and
+    * `sp` adds span_start, doc_off and span_len. `tag` suffixes the four
+    * names when one query places two streams (x124). */
+  private def packOffsetsSql(from: String = "documents", carry: String = "",
+      ord: String = "md5(CAST(doc_id AS VARCHAR))", tag: String = ""): String = {
+    val L = packSeqLen
+    s"""d$tag AS (SELECT source, doc_id$carry,
+      |    CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT) AS n_tok,
+      |    $ord AS ord
+      |  FROM $from),
+      |c$tag AS (SELECT *,
+      |    CAST(COALESCE(SUM(n_tok) OVER (PARTITION BY source ORDER BY ord, doc_id
+      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum_before
+      |  FROM d$tag),
+      |e$tag AS (SELECT *,
+      |    unnest(range(cum_before // $L, (cum_before + n_tok - 1) // $L + 1)) AS pack_id
+      |  FROM c$tag),
+      |sp$tag AS (SELECT *,
+      |    GREATEST(cum_before, pack_id*$L) - pack_id*$L AS span_start,
+      |    GREATEST(cum_before, pack_id*$L) - cum_before AS doc_off,
+      |    LEAST(cum_before + n_tok, (pack_id+1)*$L) - GREATEST(cum_before, pack_id*$L) AS span_len
+      |  FROM e$tag)""".stripMargin
   }
 
   /** x69: PageRank centrality over the verified near-dup graph — which
@@ -3087,44 +3140,18 @@ object TextQueries {
     * output size is input size + corpus_tokens/512 — linear. */
   val packSpans = sql(
     "x112_pack_spans",
-    s"""WITH d AS (SELECT source, doc_id,
-      |    CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT) AS n_tok,
-      |    md5(CAST(doc_id AS VARCHAR)) AS ord
-      |  FROM documents),
-      |c AS (SELECT source, doc_id, n_tok,
-      |    CAST(COALESCE(SUM(n_tok) OVER (PARTITION BY source ORDER BY ord, doc_id
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum_before
-      |  FROM d),
-      |e AS (SELECT source, doc_id, n_tok, cum_before,
-      |    unnest(range(cum_before // $packSeqLen, (cum_before + n_tok - 1) // $packSeqLen + 1)) AS pack_id
-      |  FROM c)
+    s"""WITH ${packOffsetsSql()}
       |SELECT source, CAST(pack_id AS BIGINT) AS pack_id, doc_id,
-      |  CAST(GREATEST(cum_before, pack_id*$packSeqLen) - pack_id*$packSeqLen AS BIGINT) AS span_start,
-      |  CAST(LEAST(cum_before + n_tok, (pack_id+1)*$packSeqLen)
-      |    - GREATEST(cum_before, pack_id*$packSeqLen) AS BIGINT) AS span_len
-      |FROM e ORDER BY source, pack_id, span_start, doc_id""".stripMargin) { (s, d) =>
+      |  CAST(span_start AS BIGINT) AS span_start, CAST(span_len AS BIGINT) AS span_len
+      |FROM sp ORDER BY source, pack_id, span_start, doc_id""".stripMargin) { (s, d) =>
     packSpansOf(docs(s, d)).orderBy("source", "pack_id", "span_start", "doc_id")
   }
 
   /** x112's engine over an arbitrary (source, doc_id, text) frame (factored
     * so TextPackSpec pins the pack-tiling invariant on the live plan). */
-  def packSpansOf(documents: DataFrame): DataFrame = {
-    val L = packSeqLen
-    val dd = documents.select(col("source"), col("doc_id"),
-      size(split(trim(col("text")), "\\s+")).cast("long").as("n_tok"))
-    graft.operators.PrefixQuota.runningBefore(
-      dd, "source",
-      orderKey = md5(col("doc_id").cast("string")), tie = col("doc_id"),
-      value = col("n_tok"))
-      .withColumn("pack_id",
-        explode(sequence(expr(s"cum_before div $L"),
-          expr(s"(cum_before + n_tok - 1) div $L"))))
-      .select(col("source"), col("pack_id"), col("doc_id"),
-        (greatest(col("cum_before"), col("pack_id") * L) - col("pack_id") * L)
-          .as("span_start"),
-        (least(col("cum_before") + col("n_tok"), (col("pack_id") + 1) * L)
-          - greatest(col("cum_before"), col("pack_id") * L)).as("span_len"))
-  }
+  def packSpansOf(documents: DataFrame): DataFrame =
+    packSpans(packOffsetsOf(documents))
+      .select("source", "pack_id", "doc_id", "span_start", "span_len")
 
   /** Mergeable per-source datasheet statistics — the commutative-monoid
     * form of x57's release datasheet: counts/sums add, the language set
@@ -3136,7 +3163,7 @@ object TextQueries {
   def datasheetStatsOf(dd: DataFrame): DataFrame =
     dd.groupBy("source").agg(
       count(lit(1)).as("n_docs"),
-      sum(size(split(trim(col("text")), "\\s+")).cast("long")).as("n_tokens"),
+      sum(nTokOfText).as("n_tokens"),
       sum(length(col("text")).cast("long")).as("n_chars"),
       collect_set(col("lang")).as("langs"),
       min(length(col("text")).cast("long")).as("min_chars"),
@@ -3239,14 +3266,7 @@ object TextQueries {
     * exact integers (pad_ppm by floor-div); no floats anywhere. */
   val packEfficiency = sql(
     "x114_pack_efficiency",
-    s"""WITH d AS (SELECT source, doc_id,
-      |    CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT) AS n_tok,
-      |    md5(CAST(doc_id AS VARCHAR)) AS ord
-      |  FROM documents),
-      |c AS (SELECT source, doc_id, n_tok,
-      |    CAST(COALESCE(SUM(n_tok) OVER (PARTITION BY source ORDER BY ord, doc_id
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum_before
-      |  FROM d)
+    s"""WITH ${packOffsetsSql()}
       |SELECT source,
       |  CAST(COUNT(*) AS BIGINT) AS n_docs,
       |  CAST(SUM(n_tok) AS BIGINT) AS n_tokens,
@@ -3265,12 +3285,7 @@ object TextQueries {
     * so TextPackSpec pins the x112 identities on the live plan). */
   def packEfficiencyOf(documents: DataFrame): DataFrame = {
     val L = packSeqLen
-    val dd = documents.select(col("source"), col("doc_id"),
-      size(split(trim(col("text")), "\\s+")).cast("long").as("n_tok"))
-    graft.operators.PrefixQuota.runningBefore(
-      dd, "source",
-      orderKey = md5(col("doc_id").cast("string")), tie = col("doc_id"),
-      value = col("n_tok"))
+    packOffsetsOf(documents)
       .withColumn("doc_spans",
         expr(s"(cum_before + n_tok - 1) div $L - cum_before div $L + 1"))
       .groupBy("source").agg(
@@ -3308,10 +3323,9 @@ object TextQueries {
   val curationFunnel = sql(
     "x116_curation_funnel", HashOracles.curationFunnel) { (s, d) =>
     val dd = docs(s, d)
-    val nTok = size(split(trim(col("text")), "\\s+")).cast("long")
     val raw = dd.groupBy("source").agg(
-      count(lit(1)).as("n_raw"), sum(nTok).as("tok_raw"))
-    val qual = dd.filter(nTok >= 40).select("doc_id", "source", "text")
+      count(lit(1)).as("n_raw"), sum(nTokOfText).as("tok_raw"))
+    val qual = dd.filter(nTokOfText >= 40).select("doc_id", "source", "text")
       .localCheckpoint(eager = false) // three consumers: stage count, exact, chain
     val nQual = qual.groupBy("source").agg(count(lit(1)).as("n_qual"))
     val (chain, erep) = chainAndErepOf(qual.select("doc_id", "text"))
@@ -3320,7 +3334,7 @@ object TextQueries {
       .join(dd.select(col("doc_id").as("e_rep"), col("source")), Seq("e_rep"))
       .groupBy("source").agg(count(lit(1)).as("n_exact"))
     val nFinal = surv
-      .join(dd.select(col("doc_id").as("keep_id"), col("source"), nTok.as("n_tok")),
+      .join(dd.select(col("doc_id").as("keep_id"), col("source"), nTokOfText.as("n_tok")),
         Seq("keep_id"))
       .groupBy("source").agg(
         count(lit(1)).as("n_final"), sum("n_tok").as("tok_final"))
@@ -3412,10 +3426,9 @@ object TextQueries {
     * frame (x98's nb move — never an unpartitioned window). */
   val shardBalance = sql(
     "x118_shard_balance", HashOracles.shardBalance) { (s, d) =>
-    val nTok = size(split(trim(col("text")), "\\s+")).cast("long")
     val sh = manifestPlan(s, d, KeepMinId)
       .select("keep_id", "n_docs", "shard")
-      .join(docs(s, d).select(col("doc_id").as("keep_id"), nTok.as("n_tok")),
+      .join(docs(s, d).select(col("doc_id").as("keep_id"), nTokOfText.as("n_tok")),
         Seq("keep_id"))
     val g = sh.groupBy("shard").agg(
       count(lit(1)).as("n_clusters"),
@@ -3485,25 +3498,7 @@ object TextQueries {
     * over this frame minus the digest. */
   val packAssemble = sql(
     "x120_pack_assemble",
-    s"""WITH d AS (SELECT source, doc_id,
-      |    string_split_regex(trim(text), '\\s+') AS toks,
-      |    CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT) AS n_tok,
-      |    md5(CAST(doc_id AS VARCHAR)) AS ord
-      |  FROM documents),
-      |c AS (SELECT source, doc_id, toks, n_tok,
-      |    CAST(COALESCE(SUM(n_tok) OVER (PARTITION BY source ORDER BY ord, doc_id
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum_before
-      |  FROM d),
-      |e AS (SELECT source, doc_id, toks, n_tok, cum_before,
-      |    unnest(range(cum_before // $packSeqLen, (cum_before + n_tok - 1) // $packSeqLen + 1)) AS pack_id
-      |  FROM c),
-      |sp AS (SELECT source, CAST(pack_id AS BIGINT) AS pack_id,
-      |    GREATEST(cum_before, pack_id*$packSeqLen) - pack_id*$packSeqLen AS span_start,
-      |    GREATEST(cum_before, pack_id*$packSeqLen) - cum_before AS doc_off,
-      |    LEAST(cum_before + n_tok, (pack_id+1)*$packSeqLen)
-      |      - GREATEST(cum_before, pack_id*$packSeqLen) AS span_len,
-      |    toks
-      |  FROM e),
+    s"""WITH ${packOffsetsSql(carry = packToksSql)},
       |g AS (SELECT source, pack_id,
       |    CAST(COUNT(*) AS BIGINT) AS n_spans,
       |    CAST(SUM(span_len) AS BIGINT) AS n_tokens,
@@ -3526,23 +3521,7 @@ object TextQueries {
     * by (generation, hash) so appends land at the tail of the stream). */
   private def packAssembleOrdered(documents: DataFrame, orderKey: Column): DataFrame = {
     val L = packSeqLen
-    val dd = documents
-      .select(col("source"), col("doc_id"), split(trim(col("text")), "\\s+").as("toks"))
-      .withColumn("n_tok", size(col("toks")).cast("long"))
-    graft.operators.PrefixQuota.runningBefore(
-      dd, "source",
-      orderKey = orderKey, tie = col("doc_id"),
-      value = col("n_tok"))
-      .withColumn("pack_id",
-        explode(sequence(expr(s"cum_before div $L"),
-          expr(s"(cum_before + n_tok - 1) div $L"))))
-      .withColumn("span_start",
-        greatest(col("cum_before"), col("pack_id") * L) - col("pack_id") * L)
-      .withColumn("doc_off",
-        greatest(col("cum_before"), col("pack_id") * L) - col("cum_before"))
-      .withColumn("span_len",
-        least(col("cum_before") + col("n_tok"), (col("pack_id") + 1) * L)
-          - greatest(col("cum_before"), col("pack_id") * L))
+    packSpans(packPlaced(packTokensOf(documents), orderKey))
       .select(col("source"), col("pack_id"), col("span_start"), col("span_len"),
         expr("slice(toks, CAST(doc_off + 1 AS INT), CAST(span_len AS INT))")
           .as("span_toks"))
@@ -3579,25 +3558,7 @@ object TextQueries {
     * never the corpus itself — and a sources-sized rollup. */
   val packAppend = sql(
     "x124_pack_append",
-    s"""WITH da AS (SELECT source, doc_id,
-      |    string_split_regex(trim(text), '\\s+') AS toks,
-      |    CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT) AS n_tok,
-      |    '0:' || md5(CAST(doc_id AS VARCHAR)) AS ord
-      |  FROM documents WHERE doc_id % 17 <> 0),
-      |ca AS (SELECT source, doc_id, toks, n_tok,
-      |    CAST(COALESCE(SUM(n_tok) OVER (PARTITION BY source ORDER BY ord, doc_id
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum_before
-      |  FROM da),
-      |ea AS (SELECT source, doc_id, toks, n_tok, cum_before,
-      |    unnest(range(cum_before // $packSeqLen, (cum_before + n_tok - 1) // $packSeqLen + 1)) AS pack_id
-      |  FROM ca),
-      |spa AS (SELECT source, CAST(pack_id AS BIGINT) AS pack_id,
-      |    GREATEST(cum_before, pack_id*$packSeqLen) - pack_id*$packSeqLen AS span_start,
-      |    GREATEST(cum_before, pack_id*$packSeqLen) - cum_before AS doc_off,
-      |    LEAST(cum_before + n_tok, (pack_id+1)*$packSeqLen)
-      |      - GREATEST(cum_before, pack_id*$packSeqLen) AS span_len,
-      |    toks
-      |  FROM ea),
+    s"""WITH ${packOffsetsSql(from = "documents WHERE doc_id % 17 <> 0", carry = packToksSql, ord = x124Ord, tag = "a")},
       |ga AS (SELECT source, pack_id, CAST(SUM(span_len) AS BIGINT) AS n_tokens,
       |    string_agg(array_to_string(toks[CAST(doc_off+1 AS INTEGER):CAST(doc_off+span_len AS INTEGER)], ' '),
       |               ' ' ORDER BY span_start) AS body
@@ -3605,25 +3566,7 @@ object TextQueries {
       |pa AS (SELECT source, pack_id,
       |    md5(body || repeat(' <pad>', CAST($packSeqLen - n_tokens AS INTEGER))) AS old_md5
       |  FROM ga),
-      |db AS (SELECT source, doc_id,
-      |    string_split_regex(trim(text), '\\s+') AS toks,
-      |    CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT) AS n_tok,
-      |    (CASE WHEN doc_id % 17 = 0 THEN '1:' ELSE '0:' END) || md5(CAST(doc_id AS VARCHAR)) AS ord
-      |  FROM documents),
-      |cb AS (SELECT source, doc_id, toks, n_tok,
-      |    CAST(COALESCE(SUM(n_tok) OVER (PARTITION BY source ORDER BY ord, doc_id
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum_before
-      |  FROM db),
-      |eb AS (SELECT source, doc_id, toks, n_tok, cum_before,
-      |    unnest(range(cum_before // $packSeqLen, (cum_before + n_tok - 1) // $packSeqLen + 1)) AS pack_id
-      |  FROM cb),
-      |spb AS (SELECT source, CAST(pack_id AS BIGINT) AS pack_id,
-      |    GREATEST(cum_before, pack_id*$packSeqLen) - pack_id*$packSeqLen AS span_start,
-      |    GREATEST(cum_before, pack_id*$packSeqLen) - cum_before AS doc_off,
-      |    LEAST(cum_before + n_tok, (pack_id+1)*$packSeqLen)
-      |      - GREATEST(cum_before, pack_id*$packSeqLen) AS span_len,
-      |    toks
-      |  FROM eb),
+      |${packOffsetsSql(carry = packToksSql, ord = x124Ord, tag = "b")},
       |gb AS (SELECT source, pack_id, CAST(SUM(span_len) AS BIGINT) AS n_tokens,
       |    string_agg(array_to_string(toks[CAST(doc_off+1 AS INTEGER):CAST(doc_off+span_len AS INTEGER)], ' '),
       |               ' ' ORDER BY span_start) AS body
@@ -3641,6 +3584,11 @@ object TextQueries {
       |GROUP BY pb.source ORDER BY pb.source""".stripMargin) { (s, d) =>
     packAppendOf(docs(s, d)).orderBy("source")
   }
+
+  /** x124's stream order in oracle SQL: arrivals (`doc_id % 17 = 0`) after
+    * every old doc, each part in hash order (`genKey` below). */
+  private def x124Ord =
+    "(CASE WHEN doc_id % 17 = 0 THEN '1:' ELSE '0:' END) || md5(CAST(doc_id AS VARCHAR))"
 
   /** x124's engine over an arbitrary (source, doc_id, text) frame. */
   def packAppendOf(documents: DataFrame): DataFrame = {
@@ -3687,25 +3635,7 @@ object TextQueries {
     * starts (≤ spans-per-pack elements). */
   val packDecontaminate = sql(
     "x125_pack_decontaminate",
-    s"""WITH d AS (SELECT source, doc_id,
-      |    string_split_regex(trim(text), '\\s+') AS toks,
-      |    CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT) AS n_tok,
-      |    md5(CAST(doc_id AS VARCHAR)) AS ord
-      |  FROM documents WHERE substring(md5(CAST(doc_id AS VARCHAR)), 1, 1) <= 'd'),
-      |c AS (SELECT source, doc_id, toks, n_tok,
-      |    CAST(COALESCE(SUM(n_tok) OVER (PARTITION BY source ORDER BY ord, doc_id
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum_before
-      |  FROM d),
-      |e AS (SELECT source, doc_id, toks, n_tok, cum_before,
-      |    unnest(range(cum_before // $packSeqLen, (cum_before + n_tok - 1) // $packSeqLen + 1)) AS pack_id
-      |  FROM c),
-      |sp AS (SELECT source, CAST(pack_id AS BIGINT) AS pack_id,
-      |    GREATEST(cum_before, pack_id*$packSeqLen) - pack_id*$packSeqLen AS span_start,
-      |    GREATEST(cum_before, pack_id*$packSeqLen) - cum_before AS doc_off,
-      |    LEAST(cum_before + n_tok, (pack_id+1)*$packSeqLen)
-      |      - GREATEST(cum_before, pack_id*$packSeqLen) AS span_len,
-      |    toks
-      |  FROM e),
+    s"""WITH ${packOffsetsSql(carry = packToksSql, from = x125TrainDocs)},
       |g AS (SELECT source, pack_id,
       |    flatten(list(toks[CAST(doc_off+1 AS INTEGER):CAST(doc_off+span_len AS INTEGER)] ORDER BY span_start)) AS body,
       |    list_filter(list(span_start ORDER BY span_start), b -> b > 0) AS bnds
@@ -3728,34 +3658,20 @@ object TextQueries {
     packDecontaminateOf(docs(s, d)).orderBy("source", "pack_id")
   }
 
+  /** x125's train split (x31's md5 rule) in oracle SQL. */
+  private def x125TrainDocs = "documents WHERE substring(md5(CAST(doc_id AS VARCHAR)), 1, 1) <= 'd'"
+
   /** x125's engine over an arbitrary (source, doc_id, text) frame (factored
     * so TextPackSpec can engineer a boundary-crossing contamination). */
   def packDecontaminateOf(documents: DataFrame): DataFrame = {
-    val L = packSeqLen
     val h1 = substring(md5(col("doc_id").cast("string")), 1, 1)
     val evalGrams = documents.filter(h1 > "d")
-      .withColumn("t", split(trim(col("text")), "\\s+"))
+      .withColumn("t", trimToks)
       .filter(size(col("t")) >= 5)
       .withColumn("i", explode(sequence(lit(0), size(col("t")) - 5)))
       .select(array_join(expr("slice(t, i + 1, 5)"), " ").as("g"))
       .distinct()
-    val dd = documents.filter(h1 <= "d")
-      .select(col("source"), col("doc_id"), split(trim(col("text")), "\\s+").as("toks"))
-      .withColumn("n_tok", size(col("toks")).cast("long"))
-    val packs = graft.operators.PrefixQuota.runningBefore(
-      dd, "source",
-      orderKey = md5(col("doc_id").cast("string")), tie = col("doc_id"),
-      value = col("n_tok"))
-      .withColumn("pack_id",
-        explode(sequence(expr(s"cum_before div $L"),
-          expr(s"(cum_before + n_tok - 1) div $L"))))
-      .withColumn("span_start",
-        greatest(col("cum_before"), col("pack_id") * L) - col("pack_id") * L)
-      .withColumn("doc_off",
-        greatest(col("cum_before"), col("pack_id") * L) - col("cum_before"))
-      .withColumn("span_len",
-        least(col("cum_before") + col("n_tok"), (col("pack_id") + 1) * L)
-          - greatest(col("cum_before"), col("pack_id") * L))
+    val packs = packSpans(packPlaced(packTokensOf(documents.filter(h1 <= "d"))))
       .select(col("source"), col("pack_id"), col("span_start"),
         expr("slice(toks, CAST(doc_off + 1 AS INT), CAST(span_len AS INT))")
           .as("span_toks"))
@@ -3801,16 +3717,7 @@ object TextQueries {
     * plan. */
   val epochOrder = sql(
     "x121_epoch_order",
-    s"""WITH d AS (SELECT source, doc_id,
-      |    CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT) AS n_tok,
-      |    md5(CAST(doc_id AS VARCHAR)) AS ord
-      |  FROM documents),
-      |c AS (SELECT source, doc_id, n_tok,
-      |    CAST(COALESCE(SUM(n_tok) OVER (PARTITION BY source ORDER BY ord, doc_id
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum_before
-      |  FROM d),
-      |e AS (SELECT source, unnest(range(cum_before // $packSeqLen, (cum_before + n_tok - 1) // $packSeqLen + 1)) AS pack_id
-      |  FROM c),
+    s"""WITH ${packOffsetsSql()},
       |p AS (SELECT DISTINCT source, CAST(pack_id AS BIGINT) AS pack_id FROM e),
       |x AS (SELECT epoch, source, pack_id,
       |    md5('graft-epoch-v1:' || CAST(epoch AS VARCHAR) || ':' || source || ':' || CAST(pack_id AS VARCHAR)) AS k
@@ -3827,17 +3734,7 @@ object TextQueries {
   /** x121's engine over an arbitrary (source, doc_id, text) frame (factored
     * so TextPackSpec can assert the permutation properties directly). */
   def epochOrderOf(documents: DataFrame): DataFrame = {
-    val L = packSeqLen
-    val dd = documents.select(col("source"), col("doc_id"),
-      size(split(trim(col("text")), "\\s+")).cast("long").as("n_tok"))
-    val packs = graft.operators.PrefixQuota.runningBefore(
-      dd, "source",
-      orderKey = md5(col("doc_id").cast("string")), tie = col("doc_id"),
-      value = col("n_tok"))
-      .withColumn("pack_id",
-        explode(sequence(expr(s"cum_before div $L"),
-          expr(s"(cum_before + n_tok - 1) div $L"))))
-      .select("source", "pack_id").distinct()
+    val packs = packSpans(packOffsetsOf(documents)).select("source", "pack_id").distinct()
     val epochs = broadcast(
       documents.sparkSession.range(0, 3).select(col("id").cast("int").as("epoch")))
     val k = md5(concat_ws(":", lit("graft-epoch-v1"),
@@ -3870,16 +3767,7 @@ object TextQueries {
     * than a shard's packs, exactly like x121 itself. */
   val epochMixAudit = sql(
     "x122_epoch_mix_audit",
-    s"""WITH d AS (SELECT source, doc_id,
-      |    CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT) AS n_tok,
-      |    md5(CAST(doc_id AS VARCHAR)) AS ord
-      |  FROM documents),
-      |c AS (SELECT source, doc_id, n_tok,
-      |    CAST(COALESCE(SUM(n_tok) OVER (PARTITION BY source ORDER BY ord, doc_id
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum_before
-      |  FROM d),
-      |e AS (SELECT source, unnest(range(cum_before // $packSeqLen, (cum_before + n_tok - 1) // $packSeqLen + 1)) AS pack_id
-      |  FROM c),
+    s"""WITH ${packOffsetsSql()},
       |p AS (SELECT DISTINCT source, CAST(pack_id AS BIGINT) AS pack_id FROM e),
       |x AS (SELECT epoch, source, pack_id,
       |    md5('graft-epoch-v1:' || CAST(epoch AS VARCHAR) || ':' || source || ':' || CAST(pack_id AS VARCHAR)) AS k
@@ -3971,7 +3859,7 @@ object TextQueries {
     // not once per consumer
     val per = docs(s, d)
       .groupBy("source")
-      .agg(sum(size(split(trim(col("text")), "\\s+")).cast("long")).as("n_tokens"))
+      .agg(sum(nTokOfText).as("n_tokens"))
       .localCheckpoint(eager = false)
     val tot = per.agg(
       sum("n_tokens").as("total_tokens"),
@@ -4042,8 +3930,7 @@ object TextQueries {
       |                  * t.total_gated / p.n_gated, 6) END AS upsample_ratio
       |FROM per p CROSS JOIN tot t ORDER BY p.source""".stripMargin) { (s, d) =>
     val flags = qualityGateOf(
-      docs(s, d).withColumn("n_tok",
-        size(split(trim(col("text")), "\\s+")).cast("long")),
+      docs(s, d).withColumn("n_tok", nTokOfText),
       keep = Seq("source", "n_tok"))
       .select(col("source"), col("n_tok"), col("pass"))
     val per = flags.groupBy("source").agg(
@@ -4088,25 +3975,7 @@ object TextQueries {
     * integers end-to-end; ppm is floor-div. */
   val packQuality = sql(
     "x130_pack_quality",
-    s"""WITH d AS (SELECT source, doc_id,
-      |    CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT) AS n_tok,
-      |    md5(CAST(doc_id AS VARCHAR)) AS ord,
-      |    string_split(text, ' ') AS toks
-      |  FROM documents),
-      |g AS (SELECT source, doc_id, n_tok, ord,
-      |    ${gatePassSql("toks")} AS pass
-      |  FROM d),
-      |c AS (SELECT source, doc_id, n_tok, pass,
-      |    CAST(COALESCE(SUM(n_tok) OVER (PARTITION BY source ORDER BY ord, doc_id
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum_before
-      |  FROM g),
-      |e AS (SELECT source, pass, cum_before, n_tok,
-      |    unnest(range(cum_before // $packSeqLen, (cum_before + n_tok - 1) // $packSeqLen + 1)) AS pack_id
-      |  FROM c),
-      |sp AS (SELECT source, CAST(pack_id AS BIGINT) AS pack_id, pass,
-      |    CAST(LEAST(cum_before + n_tok, (pack_id + 1) * $packSeqLen)
-      |      - GREATEST(cum_before, pack_id * $packSeqLen) AS BIGINT) AS span_len
-      |  FROM e)
+    s"""WITH ${packOffsetsSql(from = gateToksDocs, carry = packPassSql)}
       |SELECT source, pack_id,
       |  CAST(COUNT(*) AS BIGINT) AS n_spans,
       |  CAST(SUM(span_len) AS BIGINT) AS n_real_tokens,
@@ -4117,27 +3986,19 @@ object TextQueries {
     packQualityFrameOf(docs(s, d)).orderBy("source", "pack_id")
   }
 
+  /** x130/x140's documents with the x64 gate flag as a `pass` carry of
+    * [[packOffsetsSql]]. The gate reads `toks` per element, so it is split
+    * once in a subquery, not inlined into every lambda. */
+  private def packPassSql = s", ${gatePassSql("toks")} AS pass"
+  private def gateToksDocs = "(SELECT *, string_split(text, ' ') AS toks FROM documents) dt"
+
   /** x130's UNORDERED per-pack quality rollup over any (doc_id, source,
     * text) frame — factored so x140's schedule consumes the identical
     * manifest (one definition, the bad_ppm rule can never drift). */
   def packQualityFrameOf(dd: DataFrame): DataFrame = {
-    val L = packSeqLen
-    val flagged = qualityGateOf(
-      dd.withColumn("n_tok",
-        size(split(trim(col("text")), "\\s+")).cast("long")),
-      keep = Seq("source", "n_tok"))
+    val flagged = qualityGateOf(dd.withColumn("n_tok", nTokOfText), keep = Seq("source", "n_tok"))
       .select(col("source"), col("doc_id"), col("n_tok"), col("pass"))
-    val spans = graft.operators.PrefixQuota.runningBefore(
-      flagged, "source",
-      orderKey = md5(col("doc_id").cast("string")), tie = col("doc_id"),
-      value = col("n_tok"))
-      .withColumn("pack_id",
-        explode(sequence(expr(s"cum_before div $L"),
-          expr(s"(cum_before + n_tok - 1) div $L"))))
-      .withColumn("span_len",
-        least(col("cum_before") + col("n_tok"), (col("pack_id") + 1) * L)
-          - greatest(col("cum_before"), col("pack_id") * L))
-    spans.groupBy("source", "pack_id").agg(
+    packSpans(packPlaced(flagged)).groupBy("source", "pack_id").agg(
       count(lit(1)).as("n_spans"),
       sum("span_len").as("n_real_tokens"),
       sum(when(col("pass") === 0, col("span_len")).otherwise(0L)).as("n_bad_tokens"))
@@ -4168,25 +4029,7 @@ object TextQueries {
     * else is row-local. */
   val annealPackOrder = sql(
     "x140_anneal_pack_order",
-    s"""WITH d AS (SELECT source, doc_id,
-      |    CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT) AS n_tok,
-      |    md5(CAST(doc_id AS VARCHAR)) AS ord,
-      |    string_split(text, ' ') AS toks
-      |  FROM documents),
-      |g AS (SELECT source, doc_id, n_tok, ord,
-      |    ${gatePassSql("toks")} AS pass
-      |  FROM d),
-      |c AS (SELECT source, doc_id, n_tok, pass,
-      |    CAST(COALESCE(SUM(n_tok) OVER (PARTITION BY source ORDER BY ord, doc_id
-      |      ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT) AS cum_before
-      |  FROM g),
-      |e AS (SELECT source, pass, cum_before, n_tok,
-      |    unnest(range(cum_before // $packSeqLen, (cum_before + n_tok - 1) // $packSeqLen + 1)) AS pack_id
-      |  FROM c),
-      |sp AS (SELECT source, CAST(pack_id AS BIGINT) AS pack_id, pass,
-      |    CAST(LEAST(cum_before + n_tok, (pack_id + 1) * $packSeqLen)
-      |      - GREATEST(cum_before, pack_id * $packSeqLen) AS BIGINT) AS span_len
-      |  FROM e),
+    s"""WITH ${packOffsetsSql(from = gateToksDocs, carry = packPassSql)},
       |pk AS (SELECT source, pack_id,
       |    CAST(SUM(span_len) AS BIGINT) AS n_real_tokens,
       |    CAST(SUM(CASE WHEN pass = 0 THEN span_len ELSE 0 END) * 1000000
@@ -4434,10 +4277,7 @@ object TextQueries {
     * hand-computable fixture (known gate failures, a planted exact-dup
     * pair, a planted near-dup pair). */
   def releasePackBridgeOf(documents: DataFrame): DataFrame = {
-    val L = packSeqLen
-    val qual = qualityGateOf(
-        documents.withColumn("n_tok",
-          size(split(trim(col("text")), "\\s+")).cast("long")),
+    val qual = qualityGateOf(documents.withColumn("n_tok", nTokOfText),
         keep = Seq("source", "n_tok", "text"))
       .filter(col("pass") === 1)
       .select("doc_id", "source", "text", "n_tok")
@@ -4464,13 +4304,7 @@ object TextQueries {
       svq,
       "source", orderKey = md5(col("keep_id").cast("string")), tie = col("keep_id"),
       value = col("n_tok"), quota = col("quota_tokens"))
-    kept
-      .withColumn("pack_id",
-        explode(sequence(expr(s"cum_before div $L"),
-          expr(s"(cum_before + n_tok - 1) div $L"))))
-      .withColumn("span_len",
-        least(col("cum_before") + col("n_tok"), (col("pack_id") + 1) * L)
-          - greatest(col("cum_before"), col("pack_id") * L))
+    packSpans(kept)
       .groupBy("source", "pack_id", "quota_tokens")
       .agg(count(lit(1)).as("n_spans"), sum("span_len").as("n_tokens"))
       .select("source", "pack_id", "quota_tokens", "n_spans", "n_tokens")
@@ -4503,16 +4337,7 @@ object TextQueries {
     * tertiles, which need a per-lang global order over every doc). */
   val pplBuckets = sql(
     "x135_ppl_buckets",
-    """WITH t AS (SELECT doc_id, lang, string_split(text, ' ') AS toks FROM documents),
-      |bgk AS (SELECT doc_id, lang, unnest(range(2, len(toks)+1)) AS i, toks FROM t),
-      |bg AS (SELECT doc_id, lang, toks[i-1] AS w1, toks[i] AS w2 FROM bgk),
-      |cpair AS (SELECT w1, w2, COUNT(*) AS c2 FROM bg GROUP BY w1, w2),
-      |cctx AS (SELECT w1, COUNT(*) AS c1 FROM bg GROUP BY w1),
-      |px AS (SELECT bg.doc_id, bg.lang,
-      |    CAST(FLOOR(CAST(c2 AS DOUBLE) / c1 * 1000000) AS BIGINT) AS f
-      |  FROM bg JOIN cpair USING (w1, w2) JOIN cctx USING (w1)),
-      |doc AS (SELECT doc_id, lang, CAST(COUNT(*) AS BIGINT) AS n_trans,
-      |    CAST(SUM(f) AS BIGINT) AS sum_f FROM px GROUP BY 1, 2),
+    s"""WITH ${lmDocSql("lang")},
       |sco AS (SELECT doc_id, lang, n_trans, sum_f // n_trans AS score_ppm FROM doc),
       |sc AS (SELECT lang, score_ppm, COUNT(*) AS n FROM sco GROUP BY 1, 2),
       |cm AS (SELECT lang, score_ppm,
@@ -4687,16 +4512,7 @@ object TextQueries {
     * table after the two corpus passes is |sources|-sized. */
   val annealSchedule = sql(
     "x137_anneal_schedule",
-    s"""WITH t AS (SELECT doc_id, lang, string_split(text, ' ') AS toks FROM documents),
-      |bgk AS (SELECT doc_id, lang, unnest(range(2, len(toks)+1)) AS i, toks FROM t),
-      |bg AS (SELECT doc_id, lang, toks[i-1] AS w1, toks[i] AS w2 FROM bgk),
-      |cpair AS (SELECT w1, w2, COUNT(*) AS c2 FROM bg GROUP BY w1, w2),
-      |cctx AS (SELECT w1, COUNT(*) AS c1 FROM bg GROUP BY w1),
-      |px AS (SELECT bg.doc_id, bg.lang,
-      |    CAST(FLOOR(CAST(c2 AS DOUBLE) / c1 * 1000000) AS BIGINT) AS f
-      |  FROM bg JOIN cpair USING (w1, w2) JOIN cctx USING (w1)),
-      |doc AS (SELECT doc_id, lang, CAST(COUNT(*) AS BIGINT) AS n_trans,
-      |    CAST(SUM(f) AS BIGINT) AS sum_f FROM px GROUP BY 1, 2),
+    s"""WITH ${lmDocSql("lang")},
       |sco AS (SELECT doc_id, lang, n_trans, sum_f // n_trans AS score_ppm FROM doc),
       |sc AS (SELECT lang, score_ppm, COUNT(*) AS n FROM sco GROUP BY 1, 2),
       |cm AS (SELECT lang, score_ppm,
@@ -4905,16 +4721,7 @@ object TextQueries {
     * it (never onto doc rows). */
   val robustQuality = sql(
     "x139_robust_quality",
-    """WITH t AS (SELECT doc_id, source, string_split(text, ' ') AS toks FROM documents),
-      |bgk AS (SELECT doc_id, source, unnest(range(2, len(toks)+1)) AS i, toks FROM t),
-      |bg AS (SELECT doc_id, source, toks[i-1] AS w1, toks[i] AS w2 FROM bgk),
-      |cpair AS (SELECT w1, w2, COUNT(*) AS c2 FROM bg GROUP BY w1, w2),
-      |cctx AS (SELECT w1, COUNT(*) AS c1 FROM bg GROUP BY w1),
-      |px AS (SELECT bg.doc_id, bg.source,
-      |    CAST(FLOOR(CAST(c2 AS DOUBLE) / c1 * 1000000) AS BIGINT) AS f
-      |  FROM bg JOIN cpair USING (w1, w2) JOIN cctx USING (w1)),
-      |doc AS (SELECT doc_id, source, CAST(COUNT(*) AS BIGINT) AS n_trans,
-      |    CAST(SUM(f) AS BIGINT) AS sum_f FROM px GROUP BY 1, 2),
+    s"""WITH ${lmDocSql("source")},
       |sco AS (SELECT doc_id, source, sum_f // n_trans AS score_ppm FROM doc),
       |sc AS (SELECT source, score_ppm, COUNT(*) AS n FROM sco GROUP BY 1, 2),
       |cm AS (SELECT source, score_ppm,
@@ -5008,7 +4815,7 @@ object TextQueries {
     val A = B / 10
     val M = B - A
     val flags = qualityGateOf(
-      dd.withColumn("n_tok", size(split(trim(col("text")), "\\s+")).cast("long")),
+      dd.withColumn("n_tok", nTokOfText),
       keep = Seq("lang", "source", "n_tok", "text"))
       .select("doc_id", "lang", "source", "n_tok", "text", "pass")
     val per = flags.groupBy("source")
@@ -5088,16 +4895,7 @@ object TextQueries {
     * everything after is |sources|-sized with the total broadcast. */
   val doremiWeights = sql(
     "x141_doremi_weights",
-    s"""WITH t AS (SELECT doc_id, lang, string_split(text, ' ') AS toks FROM documents),
-      |bgk AS (SELECT doc_id, lang, unnest(range(2, len(toks)+1)) AS i, toks FROM t),
-      |bg AS (SELECT doc_id, lang, toks[i-1] AS w1, toks[i] AS w2 FROM bgk),
-      |cpair AS (SELECT w1, w2, COUNT(*) AS c2 FROM bg GROUP BY w1, w2),
-      |cctx AS (SELECT w1, COUNT(*) AS c1 FROM bg GROUP BY w1),
-      |px AS (SELECT bg.doc_id, bg.lang,
-      |    CAST(FLOOR(CAST(c2 AS DOUBLE) / c1 * 1000000) AS BIGINT) AS f
-      |  FROM bg JOIN cpair USING (w1, w2) JOIN cctx USING (w1)),
-      |doc AS (SELECT doc_id, lang, CAST(COUNT(*) AS BIGINT) AS n_trans,
-      |    CAST(SUM(f) AS BIGINT) AS sum_f FROM px GROUP BY 1, 2),
+    s"""WITH ${lmDocSql("lang")},
       |sco AS (SELECT doc_id, lang, n_trans, sum_f // n_trans AS score_ppm FROM doc),
       |w AS (SELECT doc_id, source,
       |    CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT) AS n_tok
@@ -5128,8 +4926,7 @@ object TextQueries {
     // after the rollup instead of riding every bigram row (same values —
     // both are functions of the doc row).
     val sco = lmScoreCore(dd, Nil)
-      .join(dd.select(col("doc_id"), col("source"),
-        size(split(trim(col("text")), "\\s+")).cast("long").as("n_tok")), Seq("doc_id"))
+      .join(dd.select(col("doc_id"), col("source"), nTokOfText.as("n_tok")), Seq("doc_id"))
       .withColumn("score_ppm", expr("sum_f div n_trans"))
     val per = sco.groupBy("source").agg(
       count(lit(1)).as("n_docs"),
@@ -5272,7 +5069,7 @@ object TextQueries {
   /** x143's engine over any (source, text) frame. */
   def truncationWasteOf(dd: DataFrame): DataFrame =
     dd.select(col("source"),
-        size(split(trim(col("text")), "\\s+")).cast("long").as("n_tok"),
+        nTokOfText.as("n_tok"),
         explode(array(lit(64L), lit(256L), lit(1024L))).as("seq_len"))
       .groupBy("source", "seq_len").agg(
         sum(when(col("n_tok") > col("seq_len"), 1L).otherwise(0L)).as("n_docs_over"),
@@ -5437,8 +5234,7 @@ object TextQueries {
     * scan, |sources| rows out), factored so x152's budget sweep prices
     * three budgets off ONE scan. */
   private def repeatSupplyOf(dd: DataFrame): DataFrame =
-    dd.select(col("source"),
-        size(split(trim(col("text")), "\\s+")).cast("long").as("n_tok"))
+    dd.select(col("source"), nTokOfText.as("n_tok"))
       .groupBy("source").agg(sum("n_tok").as("supply"))
       .localCheckpoint(eager = false) // bounded; rungs + final pricing read it
 
@@ -5635,16 +5431,7 @@ object TextQueries {
     * rows. */
   val scoreLengthBias = sql(
     "x148_score_length_bias",
-    s"""WITH t AS (SELECT doc_id, lang, string_split(text, ' ') AS toks FROM documents),
-      |bgk AS (SELECT doc_id, lang, unnest(range(2, len(toks)+1)) AS i, toks FROM t),
-      |bg AS (SELECT doc_id, lang, toks[i-1] AS w1, toks[i] AS w2 FROM bgk),
-      |cpair AS (SELECT w1, w2, COUNT(*) AS c2 FROM bg GROUP BY w1, w2),
-      |cctx AS (SELECT w1, COUNT(*) AS c1 FROM bg GROUP BY w1),
-      |px AS (SELECT bg.doc_id, bg.lang,
-      |    CAST(FLOOR(CAST(c2 AS DOUBLE) / c1 * 1000000) AS BIGINT) AS f
-      |  FROM bg JOIN cpair USING (w1, w2) JOIN cctx USING (w1)),
-      |doc AS (SELECT doc_id, lang, CAST(COUNT(*) AS BIGINT) AS n_trans,
-      |    CAST(SUM(f) AS BIGINT) AS sum_f FROM px GROUP BY 1, 2),
+    s"""WITH ${lmDocSql("lang")},
       |sco AS (SELECT doc_id, lang, n_trans, sum_f // n_trans AS score_ppm FROM doc),
       |bkt AS (SELECT n_trans, score_ppm,
       |    CAST(${(0 until 20).map(b => s"WHEN n_trans < ${2L << b} THEN $b")
@@ -5755,7 +5542,7 @@ object TextQueries {
   /** x149's engine over any (doc_id, source, text) frame. */
   def dsirImportanceOf(dd: DataFrame): DataFrame = {
     val flags = qualityGateOf(
-      dd.withColumn("n_tok", size(split(trim(col("text")), "\\s+")).cast("long")),
+      dd.withColumn("n_tok", nTokOfText),
       keep = Seq("source", "n_tok", "text"))
       .select("doc_id", "source", "n_tok", "text", "pass")
     val bg = bigramsOf(flags, Seq("source", "n_tok", "pass"))
@@ -5945,7 +5732,7 @@ object TextQueries {
     * reshape anyway). */
   private[graft] def gateAblationWideOf(dd: DataFrame): DataFrame = {
     val flags = qualityGateOf(
-      dd.withColumn("n_tok", size(split(trim(col("text")), "\\s+")).cast("long")),
+      dd.withColumn("n_tok", nTokOfText),
       keep = Seq("source", "n_tok"))
       .select(col("source"), col("n_tok"),
         (lit(1) - col("r_len")).as("f_len"), (lit(1) - col("r_wlen")).as("f_wlen"),
@@ -6043,7 +5830,7 @@ object TextQueries {
     val per = docs(s, d)
       .crossJoin(bpeMergeTable(s, d))
       .select(col("source"),
-        size(split(trim(col("text")), "\\s+")).cast("long").as("n_ws"),
+        nTokOfText.as("n_ws"),
         size(expr("graft_bpe_tokens(text, merges)")).cast("long").as("n_bpe"))
       .groupBy("source")
       .agg(sum("n_ws").as("ws_mass"), sum("n_bpe").as("bpe_mass"))
@@ -6389,7 +6176,7 @@ object TextQueries {
   def deconMixtureShiftOf(dd: DataFrame): DataFrame = {
     val h1 = substring(md5(col("doc_id").cast("string")), 1, 1)
     val train = dd.filter(h1 <= "d").select(col("source"), col("doc_id"),
-      size(split(trim(col("text")), "\\s+")).cast("long").as("n_tok"))
+      nTokOfText.as("n_tok"))
     val flagged = textDecontaminateOf(dd)
       .select(col("train_id").as("doc_id")).distinct()
       .withColumn("hit", lit(1))

@@ -279,4 +279,21 @@ class NflPipelineSpec extends AnyFunSuite with Matchers with SparkTestBase {
     team.keySet shouldBe Set("DEF1", "DEF2")
     team("DEF1") shouldBe -0.8 +- eps   // median of (-0.4, -1.2)
   }
+
+  test("unpersistAll drops the two persisted frames; the checkpointed stages were never cached") {
+    import org.apache.spark.storage.StorageLevel
+    val p = new NflPipeline(
+      NflIngest.readTracking(spark, s"$dir/tracking_week*.csv"),
+      NflIngest.readPff(spark, s"$dir/pffScoutingData.csv"),
+      NflIngest.readPlays(spark, s"$dir/plays.csv"),
+      NflIngest.readPlayers(spark, s"$dir/players.csv"))
+    p.rushersFinal.count()
+    // storageLevel is what the cache manager holds for the frame: NONE for
+    // a localCheckpoint, whose blocks belong to its RDD instead
+    Seq(p.playStart, p.playEnd, p.setPoints, p.metric, p.rushersFinal)
+      .foreach(_.storageLevel shouldBe StorageLevel.NONE)
+    Seq(p.mainDf, p.rusherFrames).foreach(_.storageLevel should not be StorageLevel.NONE)
+    p.unpersistAll()
+    Seq(p.mainDf, p.rusherFrames).foreach(_.storageLevel shouldBe StorageLevel.NONE)
+  }
 }

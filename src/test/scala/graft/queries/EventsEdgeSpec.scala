@@ -16,8 +16,8 @@ class EventsEdgeSpec extends AnyFunSuite with Matchers with SparkTestBase {
 
   private case class Ev(id: Long, user: Long, typ: String, us: Long)
 
-  private def rawEvents(): Seq[Ev] =
-    Tables.events(spark, dir)
+  private def rawEvents(d: String = dir): Seq[Ev] =
+    Tables.events(spark, d)
       .select(col("event_id"), col("user_id"), col("event_type"), unix_micros(col("ts")))
       .collect()
       .map(r => Ev(r.getLong(0), r.getLong(1), r.getString(2), r.getLong(3)))
@@ -328,6 +328,93 @@ class EventsEdgeSpec extends AnyFunSuite with Matchers with SparkTestBase {
     out shouldBe expected
     // non-vacuous: at least one user has a real >30 min gap (multi-session)
     expected.values.max should be > 1L
+  }
+
+  /** Session-boundary fixture: gaps of exactly 30 min (same session) and
+    * 30 min + 1 µs (new session), over two users and three event types. */
+  private lazy val boundaryDir: String = {
+    import spark.implicits._
+    val tmp = java.nio.file.Files.createTempDirectory("session-boundary").toString
+    val t0 = 1767261600000000L // 2026-01-01 10:00:00 UTC, in µs
+    val gap = 1800000000L // 30 min
+    def ts(us: Long) = {
+      val t = new java.sql.Timestamp(us / 1000)
+      t.setNanos(((us % 1000000) * 1000).toInt)
+      t
+    }
+    Seq(
+      (1L, 1L, "view", t0), (2L, 1L, "click", t0 + gap),
+      (3L, 1L, "purchase", t0 + 2 * gap + 1), (4L, 1L, "view", t0 + 2 * gap + 2),
+      (5L, 2L, "click", t0), (6L, 2L, "view", t0 + gap + 1),
+      (7L, 2L, "purchase", t0 + 2 * gap + 1))
+      .map { case (id, u, typ, us) => (id, ts(us), u, typ, 1.0, "{}") }
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .write.parquet(s"$tmp/events.parquet")
+    tmp
+  }
+
+  /** Both corpora the session consumers are checked on: the shipped rows
+    * and the boundary fixture, whose session ids are pinned by hand. */
+  private def sessionCorpora: Seq[String] = {
+    sessionsOf(rawEvents(boundaryDir)) shouldBe
+      Map(1L -> 1L, 2L -> 1L, 3L -> 2L, 4L -> 2L, 5L -> 1L, 6L -> 2L, 7L -> 2L)
+    Seq(dir, boundaryDir)
+  }
+
+  /** Each (user, session)'s events in (us, event_id) order. */
+  private def sessionRuns(evs: Seq[Ev]): Iterable[Seq[Ev]] = {
+    val sid = sessionsOf(evs)
+    evs.groupBy(e => (e.user, sid(e.id))).values.map(_.sortBy(e => (e.us, e.id)))
+  }
+
+  test("x46_ev_session_stats ≡ per-session count and span of the imperative gap walk") {
+    sessionCorpora.foreach { d =>
+      val evs = rawEvents(d)
+      val sid = sessionsOf(evs)
+      val expected = evs.groupBy(e => (e.user, sid(e.id))).map { case (k, es) =>
+        k -> ((es.size.toLong, es.map(_.us).max - es.map(_.us).min))
+      }
+      // registry: x46_ev_session_stats
+      val got = EventsQueries.sessionStats.run(spark, d).collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> ((r.getLong(2), r.getLong(3)))).toMap
+      withClue(s"$d: ") { got shouldBe expected }
+    }
+  }
+
+  test("x83_ev_transitions ≡ within-session type steps of the imperative gap walk") {
+    sessionCorpora.foreach { d =>
+      val steps = sessionRuns(rawEvents(d)).toSeq
+        .flatMap(run => run.zip(run.drop(1)).map { case (a, b) => (a.typ, b.typ) })
+      val n = steps.groupBy(identity).map { case (k, xs) => k -> xs.size.toLong }
+      val fromTot = n.groupBy(_._1._1).map { case (t, m) => t -> m.values.sum }
+      val expected = n.map { case (k @ (a, _), c) => k -> ((c, c.toDouble / fromTot(a))) }
+      // registry: x83_ev_transitions
+      val got = EventsQueries.sessionTransitions.run(spark, d).collect()
+        .map(r => (r.getString(0), r.getString(1)) -> ((r.getLong(2), r.getDouble(3)))).toMap
+      withClue(s"$d: ") { got shouldBe expected }
+    }
+  }
+
+  test("x98_ev_cooccurrence ≡ basket lift over the imperative gap walk's sessions") {
+    sessionCorpora.foreach { d =>
+      val baskets = sessionRuns(rawEvents(d)).toSeq.map(_.map(_.typ).toSet)
+      val nBaskets = baskets.size.toLong
+      def support(ts: String*) = baskets.count(b => ts.forall(b)).toLong
+      val types = baskets.flatten.distinct.sorted
+      val expected = (for {
+        a <- types; b <- types if a < b && support(a, b) > 0
+      } yield (a, b) -> ((support(a, b), support(a), support(b), nBaskets,
+        (BigInt(support(a, b)) * nBaskets * 1000000 / (BigInt(support(a)) * support(b))).toLong)))
+        .toMap
+      // registry: x98_ev_cooccurrence
+      val got = EventsQueries.cooccurrence.run(spark, d).collect()
+        .map(r => (r.getString(0), r.getString(1)) ->
+          ((r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6)))).toMap
+      withClue(s"$d: ") {
+        got shouldBe expected
+        got should not be empty
+      }
+    }
   }
 
   private def unixMicrosOf(ts: java.sql.Timestamp): Long =
