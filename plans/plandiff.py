@@ -2,7 +2,7 @@
 """Diff two `graft.Plans` dumps query by query.
 
 Usage:
-  plandiff.py A.txt B.txt [--allow NAME]... [--context N]
+  plandiff.py A.txt B.txt
   plandiff.py --selftest
 
 A dump is the stdout of `sbt -batch "runMain graft.Plans <sfDir>"`: one
@@ -23,8 +23,8 @@ SAME plan compare equal:
     lambda serial, which differ between any two JVMs.
 
 Prints one line per differing query plus a unified diff of its normalized
-plan, then a summary. Exit status is 1 if any query outside `--allow`
-differs or exists in only one dump, else 0.
+plan, then a summary. Exit status is 1 if any query differs or exists in
+only one dump, else 0.
 """
 import difflib
 import re
@@ -76,7 +76,7 @@ def normalize(body):
     return out
 
 
-def compare(a, b, allow=(), context=3, out=sys.stdout):
+def compare(a, b, out=sys.stdout):
     """Returns (n_same, differing names, names in one dump only)."""
     same, differ, lonely = 0, [], []
     for name in list(a) + [n for n in b if n not in a]:
@@ -89,9 +89,8 @@ def compare(a, b, allow=(), context=3, out=sys.stdout):
             same += 1
             continue
         differ.append(name)
-        tag = "DIFF(allowed)" if name in allow else "DIFF"
-        print(f"{tag} {name}", file=out)
-        for d in difflib.unified_diff(na, nb, "A/" + name, "B/" + name, n=context, lineterm=""):
+        print(f"DIFF {name}", file=out)
+        for d in difflib.unified_diff(na, nb, "A/" + name, "B/" + name, lineterm=""):
             print("    " + d, file=out)
     return same, differ, lonely
 
@@ -141,24 +140,12 @@ def main(argv):
     if argv[:1] == ["--selftest"]:
         selftest()
         return 0
-    allow, files, context = set(), [], 3
-    it = iter(argv)
-    for arg in it:
-        if arg == "--allow":
-            allow.add(next(it))
-        elif arg == "--context":
-            context = int(next(it))
-        else:
-            files.append(arg)
-    if len(files) != 2:
+    if len(argv) != 2:
         sys.exit(__doc__)
-    a, b = (parse(open(f, encoding="utf-8", errors="replace")) for f in files)
-    same, differ, lonely = compare(a, b, allow, context)
-    bad = [n for n in differ if n not in allow] + lonely
-    n_allowed = sum(n in allow for n in differ)
-    print(f"# {same} identical, {len(differ)} differ ({n_allowed} allowed),"
-          f" {len(lonely)} in one dump only")
-    return 1 if bad else 0
+    a, b = (parse(open(f, encoding="utf-8", errors="replace")) for f in argv)
+    same, differ, lonely = compare(a, b)
+    print(f"# {same} identical, {len(differ)} differ, {len(lonely)} in one dump only")
+    return 1 if differ or lonely else 0
 
 
 if __name__ == "__main__":

@@ -2325,7 +2325,9 @@ object TextQueries {
     * window does at 100 TB. `Ladder mixture` measures that crossover: the
     * one-task-per-group window goes superlinear at 16 M rows while the
     * bucket-split plan stays near-flat. */
-  private val packSeqLen = 512L
+  // final: a compile-time constant, so the pack oracles built above this
+  // line (x53's packOffsetsSql) read 512, not the field's default 0
+  private final val packSeqLen = 512L
   val textPack = sql(
     "x54_text_pack",
     s"""WITH ${packOffsetsSql()}

@@ -13,6 +13,19 @@ class TextPackSpec extends AnyFunSuite with Matchers with SparkTestBase {
 
   private val dir = "/root/testdata/sf0.001"
 
+  test("every pack oracle divides by the 512-token pack length, x53's included") {
+    // x53's oracle string is built before the pack length's declaration, so
+    // a non-constant field would still read 0 there
+    val lens = """cum_before(?: \+ n_tok - 1\))? // (\d+)|pack_id(?:\+1\))?\*(\d+)""".r
+    val packOracles = graft.SparkEntry.oracleSql.filter(_._2.contains("cum_before //"))
+    packOracles.keySet should contain allOf ("x53_text_mixture", "x54_text_pack", "x112_pack_spans")
+    packOracles.foreach { case (name, sqlText) =>
+      val found = lens.findAllMatchIn(sqlText).map(m => Option(m.group(1)).getOrElse(m.group(2))).toSet
+      withClue(name + ": ") { found shouldBe Set("512") }
+    }
+    packOracles("x53_text_mixture") should (include("// 512") and not include ("// 0"))
+  }
+
   test("x112 spans tile every pack: contiguous from 0; full packs sum to 512") {
     // registry: x112_pack_spans
     val rows = TextQueries.packSpans.run(spark, dir).collect()
