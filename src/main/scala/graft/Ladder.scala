@@ -374,11 +374,8 @@ final class Ladder(spark: SparkSession, emit: String => Unit,
       val pairs = TextQueries.minhashPairs(sigs).select("doc_a", "doc_b")
         .localCheckpoint(eager = false)
       val labels = TextQueries.connectedReps(sigs.select("doc_id"), pairs)
-      val clusters = labels.join(sigs, Seq("doc_id"))
-        .groupBy("rep")
-        .agg(count(lit(1)).as("n"),
-          udaf(new graft.functions.MinHashUnion(32)).apply(col("sig")).as("csig"))
-      val agg = clusters.agg(count(lit(1)), max("n"), sum("n")).head()
+      val clusters = TextQueries.clusterSigsOf(labels, sigs)
+      val agg = clusters.agg(count(lit(1)), max("n_docs"), sum("n_docs")).head()
       (agg.getLong(0), agg.getLong(1), agg.getLong(2))
     }
     cal.take()
@@ -439,7 +436,8 @@ final class Ladder(spark: SparkSession, emit: String => Unit,
     // ladder row proves the iteration cost scales with the DUP GRAPH, not
     // the corpus (pairs come banded from the artifact, like the x26 CC)
     val (tPagerank, prStats) = time {
-      val a = TextQueries.pagerankFromWeightedPairs(TextQueries.weightedPairs(corpusSigs))
+      val a = TextQueries.pagerankFromWeightedPairs(
+        TextQueries.weightedPairs(corpusSigs).localCheckpoint(eager = false))
         .agg(count(lit(1)), max("pr")).head()
       (a.getLong(0), if (a.isNullAt(1)) None else Some(BigDecimal(a.getDouble(1))))
     }

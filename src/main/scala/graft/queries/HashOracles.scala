@@ -230,17 +230,16 @@ bands AS (SELECT doc_id, unnest(range(0, 8)) AS b, sig FROM sig),
 bands2 AS (SELECT doc_id, b, array_to_string(sig[4*b+1:4*b+4], ',') AS bk FROM bands)"""
   }
 
-  /** Shared CTE chain for x03/x26: exact-dup pre-collapse → 32-hash
+  /** The shared chain over any base query with (doc_id, text) columns:
+    * `cbase` is the base, `reps` its exact-dup pre-collapse, then 32-hash
     * MinHash → 8 bands of 4 → band-value equi-join → exact Jaccard on
     * candidates, ending in `jj` (doc_a, doc_b, jaccard) plus the `sig` /
-    * `shset` tables the cluster stage reuses. */
-  /** The shared shingle→minhash→band→verify chain over any (doc_id, text)
-    * base query (ends in `jj` (doc_a, doc_b, jaccard) over the
-    * exact-collapsed reps of `base`). A def, not a val: see the `ccCtes`
-    * initialization-order note. */
+    * `shset` tables the cluster stage reuses. A def, not a val: see the
+    * `ccCtes` initialization-order note. */
   private def minhashCtesOver(base: String): String =
     s"""WITH RECURSIVE
-reps AS (SELECT min(doc_id) AS doc_id, text FROM ($base) bq GROUP BY text),
+cbase AS ($base),
+reps AS (SELECT min(doc_id) AS doc_id, text FROM cbase GROUP BY text),
 ${sigChainCtes("reps")},
 cand AS (SELECT DISTINCT l.doc_id AS doc_a, r.doc_id AS doc_b
   FROM bands2 l JOIN bands2 r ON l.b = r.b AND l.bk = r.bk AND l.doc_id < r.doc_id),
@@ -248,17 +247,25 @@ ws AS (SELECT doc_a, doc_b, p.sh AS sh_a, q.sh AS sh_b
   FROM cand JOIN shset p ON p.doc_id = doc_a JOIN shset q ON q.doc_id = doc_b),
 jj AS (SELECT doc_a, doc_b, ${jaccard("sh_a", "sh_b", "jaccard")} FROM ws)"""
 
-  private val minhashCtes: String =
-    minhashCtesOver("SELECT doc_id, text FROM documents")
+  /** The whole corpus as a chain base. `*`, not (doc_id, text): a
+    * [[dedupChainCtes]] `carry` column (x156's `source`) reads it. */
+  private final val allDocs = "SELECT * FROM documents"
 
-  /** x37: incremental near-dup probe — incoming docs (doc_id ≡ 0 mod 10,
-    * sketched individually, no pre-collapse) against the corpus signature
-    * table (remaining docs, exact-dup pre-collapsed like x03). Both sides
+  /** x59's release quality gate: at least 40 whitespace tokens. */
+  private final val qual40 =
+    """SELECT doc_id, text FROM documents WHERE len(string_split_regex(trim(text), '\s+')) >= 40"""
+
+  private val minhashCtes: String = minhashCtesOver(allDocs)
+
+  /** The incremental near-dup probe chain of x37 and x71: incoming docs
+    * (doc_id ≡ 0 mod 10, sketched individually, no pre-collapse) against
+    * the corpus signature table (remaining docs, exact-dup pre-collapsed
+    * like x03), ending in `jj` (doc_id, corpus_doc_id, jaccard). Both sides
     * run the identical shingle→minhash chain over one union source; sides
     * are distinguished by the id split. The engine band-joins on xxhash64
     * of each 4-long signature slice; slices collide iff equal (mod a
     * ~2^-64 hash collision), so the oracle joins on the slice values. */
-  val dedupIncremental: String =
+  private def probeCtes: String =
     s"""WITH RECURSIVE
 inc AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 = 0),
 crep AS (SELECT min(doc_id) AS doc_id, text FROM documents WHERE doc_id % 10 <> 0 GROUP BY text),
@@ -271,7 +278,11 @@ ws AS (SELECT cand.doc_id AS doc_id, cand.corpus_doc_id AS corpus_doc_id,
     p.sh AS sh_a, q.sh AS sh_b
   FROM cand JOIN shset p ON p.doc_id = cand.doc_id
   JOIN shset q ON q.doc_id = cand.corpus_doc_id),
-jj AS (SELECT doc_id, corpus_doc_id, ${jaccard("sh_a", "sh_b", "jaccard")} FROM ws)
+jj AS (SELECT doc_id, corpus_doc_id, ${jaccard("sh_a", "sh_b", "jaccard")} FROM ws)"""
+
+  /** x37: the verified probe pairs. */
+  val dedupIncremental: String =
+    s"""$probeCtes
 SELECT doc_id, corpus_doc_id, jaccard FROM jj WHERE jaccard >= 0.5
 ORDER BY doc_id, corpus_doc_id"""
 
@@ -282,19 +293,7 @@ ORDER BY doc_id, corpus_doc_id"""
     * verify) plus x02's canonical-key membership; `bwk` avoids the chain's
     * `bk` band-key name. */
   val ingestTriage: String =
-    s"""WITH RECURSIVE
-inc AS (SELECT doc_id, text FROM documents WHERE doc_id % 10 = 0),
-crep AS (SELECT min(doc_id) AS doc_id, text FROM documents WHERE doc_id % 10 <> 0 GROUP BY text),
-u AS (SELECT doc_id, text FROM inc UNION ALL SELECT doc_id, text FROM crep),
-${sigChainCtes("u")},
-cand AS (SELECT DISTINCT l.doc_id AS doc_id, r.doc_id AS corpus_doc_id
-  FROM bands2 l JOIN bands2 r ON l.b = r.b AND l.bk = r.bk
-  WHERE l.doc_id % 10 = 0 AND r.doc_id % 10 <> 0),
-ws AS (SELECT cand.doc_id AS doc_id, cand.corpus_doc_id AS corpus_doc_id,
-    p.sh AS sh_a, q.sh AS sh_b
-  FROM cand JOIN shset p ON p.doc_id = cand.doc_id
-  JOIN shset q ON q.doc_id = cand.corpus_doc_id),
-jj AS (SELECT doc_id, corpus_doc_id, ${jaccard("sh_a", "sh_b", "jaccard")} FROM ws),
+    s"""$probeCtes,
 nh AS (SELECT DISTINCT doc_id FROM jj WHERE jaccard >= 0.5),
 kk AS (SELECT doc_id,
     array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' ') AS bwk
@@ -412,16 +411,29 @@ reach(s, d) AS (SELECT s, d FROM edges
 labels AS (SELECT p.doc_id, LEAST(p.doc_id, COALESCE(MIN(r.d), p.doc_id)) AS rep
   FROM sig p LEFT JOIN reach r ON r.s = p.doc_id GROUP BY p.doc_id)"""
 
+  /** The doc → exact rep → near-dup cluster chain over `base` (any query
+    * with (doc_id, text) columns), shared by every dedup-apply oracle: the
+    * minhash chain and CC closure over the exact reps, then `erep`
+    * (doc_id, carry…, e_rep) and `chain` (doc_id, carry…, rep). `carry`
+    * names `base` columns that ride along (x156's `source`). It is each
+    * family's leading WITH-prefix, so diffcheck's prefix cache evaluates
+    * the chain once per family. A def: see the `ccCtes` note. */
+  private def dedupChainCtes(base: String, carry: String*): String = {
+    val c = carry.map(_ + ", ").mkString
+    val ec = carry.map("e." + _ + ", ").mkString
+    s"""${minhashCtesOver(base)},
+$ccCtes,
+erep AS (SELECT doc_id, ${c}MIN(doc_id) OVER (PARTITION BY text) AS e_rep FROM cbase),
+chain AS (SELECT e.doc_id, ${ec}l.rep FROM erep e JOIN labels l ON l.doc_id = e.e_rep)"""
+  }
+
   /** x51: dedup APPLY — the surviving corpus after exact collapse + near-dup
     * clustering: an original doc maps to its exact-text rep (min doc_id per
     * identical text), the rep to its near-dup cluster label (the x26
     * transitive closure), and one row per cluster label survives with the
     * count of original docs it now represents. */
   val dedupApply: String =
-    s"""$minhashCtes,
-$ccCtes,
-erep AS (SELECT doc_id, MIN(doc_id) OVER (PARTITION BY text) AS e_rep FROM documents),
-chain AS (SELECT e.doc_id, l.rep FROM erep e JOIN labels l ON l.doc_id = e.e_rep)
+    s"""${dedupChainCtes(allDocs)}
 SELECT rep AS keep_id, CAST(COUNT(*) AS BIGINT) AS n_docs
 FROM chain GROUP BY rep ORDER BY keep_id"""
 
@@ -433,10 +445,7 @@ FROM chain GROUP BY rep ORDER BY keep_id"""
     * how much cross-shard dup mass a per-shard-only dedup pass would
     * miss). */
   val shardDupRate: String =
-    s"""$minhashCtes,
-$ccCtes,
-erep AS (SELECT doc_id, MIN(doc_id) OVER (PARTITION BY text) AS e_rep FROM documents),
-chain AS (SELECT e.doc_id, l.rep FROM erep e JOIN labels l ON l.doc_id = e.e_rep),
+    s"""${dedupChainCtes(allDocs)},
 shrd AS (SELECT doc_id, CAST(strpos('0123456789abcdef', substring(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1 AS INTEGER) AS shard
   FROM documents),
 cs AS (SELECT c.doc_id, c.rep, s.shard FROM chain c JOIN shrd s ON s.doc_id = c.doc_id),
@@ -456,10 +465,7 @@ GROUP BY c.shard ORDER BY c.shard"""
     * longest document per near-dup cluster, doc_id tiebreak) on the x51
     * chain, vs x51's keep-min-id bookkeeping rep. */
   val dedupKeepBest: String =
-    s"""$minhashCtes,
-$ccCtes,
-erep AS (SELECT doc_id, MIN(doc_id) OVER (PARTITION BY text) AS e_rep FROM documents),
-chain AS (SELECT e.doc_id, l.rep FROM erep e JOIN labels l ON l.doc_id = e.e_rep),
+    s"""${dedupChainCtes(allDocs)},
 cd AS (SELECT c.rep, c.doc_id, d.n_chars,
     ROW_NUMBER() OVER (PARTITION BY c.rep ORDER BY d.n_chars DESC, c.doc_id) AS rk,
     COUNT(*) OVER (PARTITION BY c.rep) AS n_docs
@@ -473,10 +479,7 @@ FROM cd WHERE rk = 1 ORDER BY cluster_rep"""
     * then x31's hex-bucket assignment keyed on the CLUSTER rep, so no
     * near-dup cluster ever straddles two splits. */
   val splitLeakageSafe: String =
-    s"""$minhashCtes,
-$ccCtes,
-erep AS (SELECT doc_id, MIN(doc_id) OVER (PARTITION BY text) AS e_rep FROM documents),
-chain AS (SELECT e.doc_id, l.rep FROM erep e JOIN labels l ON l.doc_id = e.e_rep)
+    s"""${dedupChainCtes(allDocs)}
 SELECT doc_id, rep,
   CASE WHEN substring(md5(CAST(rep AS VARCHAR)), 1, 1) <= 'b' THEN 'train'
        WHEN substring(md5(CAST(rep AS VARCHAR)), 1, 1) <= 'd' THEN 'val'
@@ -489,15 +492,8 @@ FROM chain ORDER BY doc_id"""
     * train/val/test split (first md5 hex digit of the rep) → shard +
     * in-shard position (SECOND hex digit, so every split spans all 16
     * shards and no shard mixes splits within a (split, shard) directory). */
-  val releaseManifest: String = {
-    val qualSql =
-      """SELECT doc_id, text FROM documents
-        | WHERE len(string_split_regex(trim(text), '\s+')) >= 40""".stripMargin
-    s"""${minhashCtesOver(qualSql)},
-$ccCtes,
-qual AS ($qualSql),
-erep AS (SELECT doc_id, MIN(doc_id) OVER (PARTITION BY text) AS e_rep FROM qual),
-chain AS (SELECT e.doc_id, l.rep FROM erep e JOIN labels l ON l.doc_id = e.e_rep),
+  val releaseManifest: String =
+    s"""${dedupChainCtes(qual40)},
 man AS (SELECT rep AS keep_id, CAST(COUNT(*) AS BIGINT) AS n_docs FROM chain GROUP BY rep),
 sp AS (SELECT keep_id, n_docs, md5(CAST(keep_id AS VARCHAR)) AS k FROM man)
 SELECT keep_id, n_docs,
@@ -507,21 +503,13 @@ SELECT keep_id, n_docs,
   CAST(strpos('0123456789abcdef', substring(k, 2, 1)) - 1 AS INTEGER) AS shard,
   CAST(ROW_NUMBER() OVER (PARTITION BY substring(k, 2, 1) ORDER BY k, keep_id) AS BIGINT) AS pos
 FROM sp ORDER BY shard, pos"""
-  }
 
   /** x108: keep-best release manifest — x59's pipeline with x107's
     * survivor policy (longest doc per cluster, doc_id tiebreak);
     * split/shard stay keyed on the STABLE cluster label, so the policy
     * switch changes which member ships, never where a cluster lands. */
-  val releaseManifestKeepBest: String = {
-    val qualSql =
-      """SELECT doc_id, text FROM documents
-        | WHERE len(string_split_regex(trim(text), '\s+')) >= 40""".stripMargin
-    s"""${minhashCtesOver(qualSql)},
-$ccCtes,
-qual AS ($qualSql),
-erep AS (SELECT doc_id, MIN(doc_id) OVER (PARTITION BY text) AS e_rep FROM qual),
-chain AS (SELECT e.doc_id, l.rep FROM erep e JOIN labels l ON l.doc_id = e.e_rep),
+  val releaseManifestKeepBest: String =
+    s"""${dedupChainCtes(qual40)},
 cd AS (SELECT c.rep, c.doc_id, d.n_chars,
     ROW_NUMBER() OVER (PARTITION BY c.rep ORDER BY d.n_chars DESC, c.doc_id) AS rk,
     COUNT(*) OVER (PARTITION BY c.rep) AS n_docs
@@ -538,7 +526,6 @@ SELECT cluster_rep, keep_id, keep_chars, n_docs,
   CAST(strpos('0123456789abcdef', substring(k, 2, 1)) - 1 AS INTEGER) AS shard,
   CAST(ROW_NUMBER() OVER (PARTITION BY substring(k, 2, 1) ORDER BY k, cluster_rep) AS BIGINT) AS pos
 FROM sp ORDER BY shard, pos"""
-  }
 
   /** x116: per-source curation yield funnel — stage-by-stage retention
     * through x59's release pipeline (raw → quality gate → exact collapse →
@@ -549,22 +536,15 @@ FROM sp ORDER BY shard, pos"""
     * Shares x59's WITH-chain prefix verbatim, so the diffcheck prefix
     * cache evaluates the expensive minhash+closure chain once for the
     * whole family. */
-  val curationFunnel: String = {
-    val qualSql =
-      """SELECT doc_id, text FROM documents
-        | WHERE len(string_split_regex(trim(text), '\s+')) >= 40""".stripMargin
-    s"""${minhashCtesOver(qualSql)},
-$ccCtes,
-qual AS ($qualSql),
-erep AS (SELECT doc_id, MIN(doc_id) OVER (PARTITION BY text) AS e_rep FROM qual),
-chain AS (SELECT e.doc_id, l.rep FROM erep e JOIN labels l ON l.doc_id = e.e_rep),
+  val curationFunnel: String =
+    s"""${dedupChainCtes(qual40)},
 surv AS (SELECT MIN(doc_id) AS keep_id FROM chain GROUP BY rep),
 raw AS (SELECT source,
     CAST(COUNT(*) AS BIGINT) AS n_raw,
     CAST(SUM(len(string_split_regex(trim(text), '\\s+'))) AS BIGINT) AS tok_raw
   FROM documents GROUP BY source),
 q2 AS (SELECT d.source, CAST(COUNT(*) AS BIGINT) AS n_qual
-  FROM qual q JOIN documents d ON d.doc_id = q.doc_id GROUP BY d.source),
+  FROM cbase q JOIN documents d ON d.doc_id = q.doc_id GROUP BY d.source),
 e2 AS (SELECT d.source, CAST(COUNT(*) AS BIGINT) AS n_exact
   FROM (SELECT DISTINCT e_rep FROM erep) e JOIN documents d ON d.doc_id = e.e_rep
   GROUP BY d.source),
@@ -582,7 +562,6 @@ FROM raw LEFT JOIN q2 ON raw.source = q2.source
   LEFT JOIN e2 ON raw.source = e2.source
   LEFT JOIN f2 ON raw.source = f2.source
 ORDER BY raw.source"""
-  }
 
   /** x118: release shard-balance audit — per shard of x59's manifest:
     * clusters, represented docs, SHIPPED tokens, exact token-share ppm and
@@ -590,15 +569,8 @@ ORDER BY raw.source"""
     * predictor a training-data loader reads: a shard 20% over the mean is
     * a rank that finishes 20% late every epoch. Shares x59's WITH prefix
     * verbatim through `sp` (diffcheck prefix-cache family). */
-  val shardBalance: String = {
-    val qualSql =
-      """SELECT doc_id, text FROM documents
-        | WHERE len(string_split_regex(trim(text), '\s+')) >= 40""".stripMargin
-    s"""${minhashCtesOver(qualSql)},
-$ccCtes,
-qual AS ($qualSql),
-erep AS (SELECT doc_id, MIN(doc_id) OVER (PARTITION BY text) AS e_rep FROM qual),
-chain AS (SELECT e.doc_id, l.rep FROM erep e JOIN labels l ON l.doc_id = e.e_rep),
+  val shardBalance: String =
+    s"""${dedupChainCtes(qual40)},
 man AS (SELECT rep AS keep_id, CAST(COUNT(*) AS BIGINT) AS n_docs FROM chain GROUP BY rep),
 sp AS (SELECT keep_id, n_docs, md5(CAST(keep_id AS VARCHAR)) AS k FROM man),
 sh AS (SELECT s.keep_id, s.n_docs,
@@ -614,7 +586,6 @@ SELECT shard, n_clusters, n_docs_rep, n_tokens,
   (n_tokens * 1000000) // gt.tot AS tok_share_ppm,
   (n_tokens * 16000000) // gt.tot - 1000000 AS dev_ppm
 FROM g CROSS JOIN gt ORDER BY shard"""
-  }
 
   /** x119: near-dup cluster-size histogram — log2-bucketed distribution of
     * cluster sizes over the FULL corpus chain (x51's doc→exact-rep→CC
@@ -627,10 +598,7 @@ FROM g CROSS JOIN gt ORDER BY shard"""
     val bucketCase = (0 until 20)
       .map(b => s"WHEN sz < ${2L << b} THEN $b")
       .mkString("CASE ", " ", " ELSE 20 END")
-    s"""$minhashCtes,
-$ccCtes,
-erep AS (SELECT doc_id, MIN(doc_id) OVER (PARTITION BY text) AS e_rep FROM documents),
-chain AS (SELECT e.doc_id, l.rep FROM erep e JOIN labels l ON l.doc_id = e.e_rep),
+    s"""${dedupChainCtes(allDocs)},
 cs AS (SELECT rep, CAST(COUNT(*) AS BIGINT) AS sz FROM chain GROUP BY rep),
 b AS (SELECT sz, CAST($bucketCase AS INTEGER) AS bucket FROM cs),
 g AS (SELECT bucket, CAST(COUNT(*) AS BIGINT) AS n_clusters,
@@ -649,10 +617,7 @@ FROM g CROSS JOIN gt ORDER BY bucket"""
     * spanning both. The inter-source contamination report a mixture
     * designer reads before weighting sources. */
   val dupSourceMatrix: String =
-    s"""$minhashCtes,
-$ccCtes,
-erep AS (SELECT doc_id, MIN(doc_id) OVER (PARTITION BY text) AS e_rep FROM documents),
-chain AS (SELECT e.doc_id, l.rep FROM erep e JOIN labels l ON l.doc_id = e.e_rep),
+    s"""${dedupChainCtes(allDocs)},
 ds AS (SELECT DISTINCT c.rep, d.source FROM chain c JOIN documents d ON d.doc_id = c.doc_id)
 SELECT a.source AS src_a, b.source AS src_b, CAST(COUNT(*) AS BIGINT) AS n_clusters
 FROM ds a JOIN ds b ON a.rep = b.rep AND a.source < b.source
@@ -904,13 +869,9 @@ ORDER BY th.tau"""
         |    CAST(len(string_split_regex(trim(text), '\\s+')) AS BIGINT) AS n_tok
         |  FROM documents) gq
         | WHERE $gate = 1""".stripMargin
-    s"""${minhashCtesOver(qualSql)},
-$ccCtes,
-qual AS ($qualSql),
-erep AS (SELECT doc_id, MIN(doc_id) OVER (PARTITION BY text) AS e_rep FROM qual),
-chain AS (SELECT e.doc_id, l.rep FROM erep e JOIN labels l ON l.doc_id = e.e_rep),
+    s"""${dedupChainCtes(qualSql)},
 surv AS (SELECT rep AS keep_id FROM chain GROUP BY rep),
-sv AS (SELECT s.keep_id, q.source, q.n_tok FROM surv s JOIN qual q ON q.doc_id = s.keep_id),
+sv AS (SELECT s.keep_id, q.source, q.n_tok FROM surv s JOIN cbase q ON q.doc_id = s.keep_id),
 per AS (SELECT source, CAST(SUM(n_tok) AS BIGINT) AS m FROM sv GROUP BY source),
 tot AS (SELECT CAST(SUM(m) AS BIGINT) // 2 AS budget,
     list_sum(list_sort(list(sqrt(CAST(m AS DOUBLE))))) AS sum_sqrt FROM per),
@@ -946,10 +907,7 @@ FROM sp GROUP BY source, pack_id, quota_tokens ORDER BY source, pack_id"""
   val contaminationHalo: String = {
     val trainBase = "SELECT doc_id, text FROM documents " +
       "WHERE substring(md5(CAST(doc_id AS VARCHAR)), 1, 1) <= 'd'"
-    s"""${minhashCtesOver(trainBase)},
-$ccCtes,
-erep AS (SELECT doc_id, MIN(doc_id) OVER (PARTITION BY text) AS e_rep FROM ($trainBase) tb),
-chain AS (SELECT e.doc_id, l.rep FROM erep e JOIN labels l ON l.doc_id = e.e_rep),
+    s"""${dedupChainCtes(trainBase)},
 dtk AS (SELECT doc_id,
     CASE WHEN substring(md5(CAST(doc_id AS VARCHAR)), 1, 1) <= 'd'
          THEN 'train' ELSE 'test' END AS split,
@@ -986,10 +944,7 @@ ORDER BY c.doc_id"""
     * the signed delta. The same chain + gate pieces as [[dupQualityLink]],
     * rolled up by source instead of cluster-size bucket. */
   def dedupSurvivorship(gate: String): String =
-    s"""$minhashCtes,
-$ccCtes,
-erep AS (SELECT doc_id, source, MIN(doc_id) OVER (PARTITION BY text) AS e_rep FROM documents),
-chain AS (SELECT e.doc_id, e.source, l.rep FROM erep e JOIN labels l ON l.doc_id = e.e_rep),
+    s"""${dedupChainCtes(allDocs, "source")},
 gt AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
 gp AS (SELECT doc_id, $gate AS pass FROM gt),
 cq AS (SELECT c.doc_id, c.source, c.rep, g.pass FROM chain c JOIN gp g ON g.doc_id = c.doc_id),
@@ -1013,10 +968,7 @@ FROM al a LEFT JOIN sv s USING (source) ORDER BY a.source"""
     val bucketCase = (0 until 20)
       .map(b => s"WHEN sz < ${2L << b} THEN $b")
       .mkString("CASE ", " ", " ELSE 20 END")
-    s"""$minhashCtes,
-$ccCtes,
-erep AS (SELECT doc_id, MIN(doc_id) OVER (PARTITION BY text) AS e_rep FROM documents),
-chain AS (SELECT e.doc_id, l.rep FROM erep e JOIN labels l ON l.doc_id = e.e_rep),
+    s"""${dedupChainCtes(allDocs)},
 gt AS (SELECT doc_id, string_split(text, ' ') AS toks FROM documents),
 gp AS (SELECT doc_id, $gate AS pass FROM gt),
 cq AS (SELECT c.rep, CAST(COUNT(*) AS BIGINT) AS sz,

@@ -1,42 +1,19 @@
 package graft.queries
 
-import org.apache.spark.sql.SparkSession
-
 /** Regenerates [[IvfPinned]] from a corpus directory: trains the seeded
   * KMeans once and writes the centroids as Scala source literals
   * (`Double.toString` round-trips bit-exactly through the Scala parser).
   * Usage: `sbt "runMain graft.queries.IvfPin [sfDir] [outFile]"`. */
 object IvfPin {
   def main(args: Array[String]): Unit = {
-    val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val out = if (args.length > 1) args(1)
-      else "src/main/scala/graft/queries/IvfPinned.scala"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    import org.apache.spark.sql.functions.{bit_xor, col, count, lit, xxhash64}
+    val (spark, dir, out) = Pin.open(args, "IvfPinned")
     val emb = graft.Tables.embeddings(spark, dir)
     // k comes from the artifact itself so the trainer can't drift from it
     val cs = SimilarityQueries.trainIvf(emb, nCells = IvfPinned.nCells)
-    // Corpus fingerprint, pinned beside the centroids: ties the committed
-    // index to the corpus it was trained on (SimilaritySpec asserts it
-    // against the shipped testdata — a regenerated corpus fails loudly
-    // instead of probing a stale index hash-green).
-    val fp = emb.agg(count(lit(1)), bit_xor(xxhash64(col("vec_id")))).head()
-    spark.stop()
-    val existing = new String(
-      java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(out)), "UTF-8")
-    val header = existing.substring(0, existing.indexOf("val corpusRows"))
     val body = cs.map(_.mkString("    Vector(", ", ", ")")).mkString(",\n")
-    val src = header +
-      s"val corpusRows: Long = ${fp.getLong(0)}L\n" +
-      s"  val corpusIdXor: Long = ${fp.getLong(1)}L\n" +
-      "  val centroids: Seq[Seq[Double]] = Vector(\n" + body + ")\n}\n"
-    java.nio.file.Files.write(java.nio.file.Paths.get(out), src.getBytes("UTF-8"))
+    val rows = Pin.write(emb, out,
+      "  val centroids: Seq[Seq[Double]] = Vector(\n" + body + ")\n}\n")
     println(s"pinned ${cs.size} centroids + corpus fingerprint " +
-      s"(${fp.getLong(0)} rows) from $dir into $out")
+      s"($rows rows) from $dir into $out")
   }
 }

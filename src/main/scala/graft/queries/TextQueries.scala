@@ -24,10 +24,28 @@ object TextQueries {
 
   private val tokens: Column = split(col("text"), " ")
 
-  /** Distinct 3-token shingle hashes — the unit set for Jaccard similarity.
-    * Native codegen'd expression (graft.functions.ShingleHashes): one tight
-    * loop per row instead of a sequence/slice/concat HOF pipeline. */
-  private val shingleHashes: Column = expr("graft_shingles(text, 3)")
+  /** Distinct 3-token shingle hashes of a text column — the unit set for
+    * Jaccard similarity. Native codegen'd expression
+    * (graft.functions.ShingleHashes): one tight loop per row instead of a
+    * sequence/slice/concat HOF pipeline. */
+  private def shinglesOf(text: String): Column = expr(s"graft_shingles($text, 3)")
+
+  /** The sketch rule: (doc_id, sh = [[shinglesOf]] `text`, sig = their
+    * 32-hash MinHash signature) for every row of `df`. */
+  private def sketchOf(df: DataFrame, text: String = "text"): DataFrame =
+    df.select(col("doc_id"), shinglesOf(text).as("sh"))
+      .withColumn("sig", expr("graft_minhash(sh, 32)"))
+
+  /** Exact Jaccard |A ∩ B| / |A ∪ B| of two array columns, as a double. */
+  private def jaccardOf(a: String, b: String): Column =
+    size(array_intersect(col(a), col(b))).cast("double") / size(array_union(col(a), col(b)))
+
+  /** The integer verify over two shingle-set columns: `inter` = |A ∩ B| and
+    * `uni` = |A ∪ B| as longs, for the `2·inter ≥ uni` admission and the
+    * `(inter·10^6) div uni` ppm weight — no float enters. */
+  private def withInterUni(df: DataFrame, a: String, b: String): DataFrame =
+    df.withColumn("inter", size(array_intersect(col(a), col(b))).cast("long"))
+      .withColumn("uni", (size(col(a)) + size(col(b))).cast("long") - col("inter"))
 
   // ---------------------------------------------------------------- dedup
 
@@ -119,9 +137,25 @@ object TextQueries {
     * The exact-dup pre-collapse runs [[exactCollapse]]'s hash-keyed
     * shuffle (16-byte key, in-group confirm), not a full-text groupBy. */
   def minhashSignaturesOf(documents: DataFrame): DataFrame =
-    exactReps(documents)
-      .select(col("doc_id"), shingleHashes.as("sh"))
-      .withColumn("sig", expr("graft_minhash(sh, 32)"))
+    sketchOf(exactReps(documents))
+
+  /** [[minhashSignatures]] pinned — the table every corpus-pair query
+    * reads. Without the lineage boundary, Catalyst's projection collapse
+    * inlines the shingle-array expression into each of the 32 signature
+    * lambdas → a 32× recompute of the shingling per row (measured 93 s →
+    * ~3 s at sf0.1 on x03). At cluster scale this materialization is the
+    * signature table written to storage between the sketch and pairwise
+    * stages ([[saveMinhashIndex]] is exactly that;
+    * [[dedupMinhashFromIndex]] is the probe-only steady state).
+    * localCheckpoint (not persist): blocks are released by the
+    * ContextCleaner when the query's DataFrames go out of scope, so
+    * repeated runs in one session don't accumulate cached tables.
+    * Trade-off (applies to every localCheckpoint in this file): lineage is
+    * truncated, so losing an executor mid-query fails the job instead of
+    * recomputing — the durable artifact is the production form of this
+    * same boundary. */
+  private def pinnedSignatures(s: SparkSession, d: String): DataFrame =
+    minhashSignatures(s, d).localCheckpoint(eager = false)
 
   /** Write the signature table as a durable artifact (range-sorted by
     * doc_id, so later joins/read-backs get file-level stats) — the
@@ -130,14 +164,14 @@ object TextQueries {
   def saveMinhashIndex(s: SparkSession, d: String, path: String): Unit =
     graft.sources.Sinks.sortedParquet(minhashSignatures(s, d), path, Seq("doc_id"))
 
-  /** 8 bands of 4 over a 32-long `sig` column: one row per (idCol, band,
-    * band-hash) — the LSH bucket key both the self-join (x03) and the
-    * stream probe join on. */
-  private def bandRows(df: DataFrame, idCol: String): DataFrame =
-    df.select(col(idCol), explode(
+  /** 8 bands of 4 over the 32-long signature column `sig`: one row per
+    * (carry…, band, band-hash) — the LSH bucket key the self-join (x03),
+    * the stream probe and x26's cross-cluster pass join on. */
+  private def bandRows(df: DataFrame, sig: String, carry: String*): DataFrame =
+    df.select(carry.map(col) :+ explode(
       transform(sequence(lit(0), lit(7)),
-        b => struct(b.as("band"), xxhash64(slice(col("sig"), b * 4 + 1, lit(4))).as("bh")))).as("b"))
-      .select(col(idCol), col("b.band"), col("b.bh"))
+        b => struct(b.as("band"), xxhash64(slice(col(sig), b * 4 + 1, lit(4))).as("bh")))).as("b"): _*)
+      .select(carry.map(col) ++ Seq(col("b.band"), col("b.bh")): _*)
 
   /** Band-join near-dup pairs from a signature table — the probe half of
     * x03, usable against the in-memory table or a [[saveMinhashIndex]]
@@ -154,9 +188,7 @@ object TextQueries {
     // exchange + sort of the pair table for an order nothing downstream
     // reads. At 100 TB the pair table is corpus-scale: that sort is real.
     withSets
-      .withColumn("jaccard",
-        size(array_intersect(col("sh_a"), col("sh_b")))
-          .cast("double") / size(array_union(col("sh_a"), col("sh_b"))))
+      .withColumn("jaccard", jaccardOf("sh_a", "sh_b"))
       .filter(col("jaccard") >= 0.5)
       .select("doc_a", "doc_b", "jaccard")
   }
@@ -168,7 +200,7 @@ object TextQueries {
     * density, never n². */
   def bandCandidates(sigTable: DataFrame): DataFrame = {
     // both sides of the self-join read this; don't re-derive (GC-scoped)
-    val bands = bandRows(sigTable, "doc_id").localCheckpoint(eager = false)
+    val bands = bandRows(sigTable, "sig", "doc_id").localCheckpoint(eager = false)
     bands.as("l")
       .join(bands.as("r"), Seq("band", "bh"))
       .filter(col("l.doc_id") < col("r.doc_id"))
@@ -193,9 +225,7 @@ object TextQueries {
     * across the existing index. The appended files are range-sorted by
     * doc_id within the batch like the original artifact's layout. */
   def appendToMinhashIndex(accepted: DataFrame, indexPath: String): Unit = {
-    val sigs = accepted
-      .select(col("doc_id"), shingleHashes.as("sh"))
-      .withColumn("sig", expr("graft_minhash(sh, 32)"))
+    val sigs = sketchOf(accepted)
     val n = math.max(accepted.sparkSession.sparkContext.defaultParallelism / 4, 1)
     sigs.repartitionByRange(n, col("doc_id"))
       .sortWithinPartitions(col("doc_id"))
@@ -226,7 +256,7 @@ object TextQueries {
   def nearDupProbe(incoming: DataFrame, sigTable: DataFrame,
       threshold: Double = 0.5): DataFrame =
     nearDupProbeWithBands(incoming,
-      bandRows(sigTable, "doc_id").withColumnRenamed("doc_id", "corpus_doc_id"),
+      bandRows(sigTable, "sig", "doc_id").withColumnRenamed("doc_id", "corpus_doc_id"),
       sigTable, threshold)
 
   /** Write the corpus BAND table (corpus_doc_id, band, bh) as a BUCKETED
@@ -240,7 +270,7 @@ object TextQueries {
     * sh/sig artifact the verify stage still reads. */
   def saveBandIndex(sigTable: DataFrame, table: String, buckets: Int = 32): Unit =
     graft.sources.Sinks.bucketedTable(
-      bandRows(sigTable, "doc_id").withColumnRenamed("doc_id", "corpus_doc_id"),
+      bandRows(sigTable, "sig", "doc_id").withColumnRenamed("doc_id", "corpus_doc_id"),
       table, Seq("bh"), buckets)
 
   /** [[nearDupProbe]] with the corpus band table supplied separately —
@@ -249,41 +279,19 @@ object TextQueries {
     * corpus-side shuffle at all. `corpusBands`: (corpus_doc_id, band, bh). */
   def nearDupProbeWithBands(incoming: DataFrame, corpusBands: DataFrame,
       sigTable: DataFrame, threshold: Double = 0.5): DataFrame = {
-    val probes = incoming
-      .select(col("doc_id"), shingleHashes.as("sh"))
-      .withColumn("sig", expr("graft_minhash(sh, 32)"))
-    val probeBands = probes.select(col("doc_id"), col("sh"), explode(
-      transform(sequence(lit(0), lit(7)),
-        b => struct(b.as("band"), xxhash64(slice(col("sig"), b * 4 + 1, lit(4))).as("bh")))).as("b"))
-      .select(col("doc_id"), col("sh"), col("b.band"), col("b.bh"))
-    probeBands.join(corpusBands, Seq("band", "bh"))
+    bandRows(sketchOf(incoming), "sig", "doc_id", "sh").join(corpusBands, Seq("band", "bh"))
       .filter(col("doc_id") =!= col("corpus_doc_id"))
       .select("doc_id", "corpus_doc_id", "sh")
       .dropDuplicates(Seq("doc_id", "corpus_doc_id"))
       .join(sigTable.select(col("doc_id").as("corpus_doc_id"), col("sh").as("sh_c")),
         Seq("corpus_doc_id"))
-      .withColumn("jaccard",
-        size(array_intersect(col("sh"), col("sh_c")))
-          .cast("double") / size(array_union(col("sh"), col("sh_c"))))
+      .withColumn("jaccard", jaccardOf("sh", "sh_c"))
       .filter(col("jaccard") >= threshold)
       .select("doc_id", "corpus_doc_id", "jaccard")
   }
 
   val dedupMinhash = sql("x03_dedup_minhash", HashOracles.dedupMinhash) { (s, d) =>
-    // Materialize (doc_id, sh, sig) ONCE. Without the lineage boundary,
-    // Catalyst's projection collapse inlines the shingle-array expression
-    // into each of the 32 signature lambdas → a 32× recompute of the
-    // shingling per row (measured 93 s → ~3 s at sf0.1). At cluster scale
-    // this materialization is the signature table written to storage
-    // between the sketch and pairwise stages (saveMinhashIndex is exactly
-    // that; dedupMinhashFromIndex is the probe-only steady state).
-    // localCheckpoint (not persist): blocks are released by the
-    // ContextCleaner when the query's DataFrames go out of scope, so
-    // repeated runs in one session don't accumulate cached tables. Trade-off
-    // (applies to every localCheckpoint in this file): lineage is truncated,
-    // so losing an executor mid-query fails the job instead of recomputing —
-    // the durable artifact is the production form of this same boundary.
-    minhashPairs(minhashSignatures(s, d).localCheckpoint(eager = false))
+    minhashPairs(pinnedSignatures(s, d))
       .orderBy("doc_a", "doc_b") // x03's declared output order (moved from minhashPairs)
   }
 
@@ -318,7 +326,7 @@ object TextQueries {
   /** n-gram Jaccard near-dup: candidates share a min-shingle fingerprint
     * (cheap 1-band LSH), then exact 3-gram Jaccard. */
   val dedupNgram = sql("x05_dedup_ngram_jaccard", HashOracles.dedupNgram) { (s, d) =>
-    val base = docs(s, d).select(col("doc_id"), shingleHashes.as("sh"))
+    val base = docs(s, d).select(col("doc_id"), shinglesOf("text").as("sh"))
       .withColumn("fp", array_min(col("sh")))
       // shingle sets reused by both join sides + the exact check (GC-scoped)
       .localCheckpoint(eager = false)
@@ -326,9 +334,7 @@ object TextQueries {
       .join(base.select(col("doc_id").as("doc_b"), col("sh").as("sh_b"), col("fp")).as("r"), Seq("fp"))
       .filter(col("doc_a") < col("doc_b"))
     candidates
-      .withColumn("jaccard",
-        size(array_intersect(col("sh_a"), col("sh_b")))
-          .cast("double") / size(array_union(col("sh_a"), col("sh_b"))))
+      .withColumn("jaccard", jaccardOf("sh_a", "sh_b"))
       .filter(col("jaccard") >= 0.3)
       .select("doc_a", "doc_b", "jaccard")
       .orderBy("doc_a", "doc_b")
@@ -478,9 +484,7 @@ object TextQueries {
     cand
       .join(base.select(col("doc_id").as("doc_a"), col("ch").as("ch_a")), Seq("doc_a"))
       .join(base.select(col("doc_id").as("doc_b"), col("ch").as("ch_b")), Seq("doc_b"))
-      .withColumn("overlap",
-        size(array_intersect(col("ch_a"), col("ch_b"))).cast("double")
-          / size(array_union(col("ch_a"), col("ch_b"))))
+      .withColumn("overlap", jaccardOf("ch_a", "ch_b"))
       .filter(col("overlap") >= 0.5)
       .select("doc_a", "doc_b", "overlap")
       .orderBy("doc_a", "doc_b")
@@ -573,9 +577,7 @@ object TextQueries {
     * maps every doc to its cluster. */
   private def erepSigsLabelsOf(dd: DataFrame): (DataFrame, DataFrame, DataFrame) = {
     val erep = erepFrameOf(dd).localCheckpoint(eager = false)
-    val sigs = erep.filter(col("doc_id") === col("e_rep"))
-      .select(col("doc_id"), expr("graft_shingles(rep_text, 3)").as("sh"))
-      .withColumn("sig", expr("graft_minhash(sh, 32)"))
+    val sigs = sketchOf(erep.filter(col("doc_id") === col("e_rep")), "rep_text")
       .localCheckpoint(eager = false)
     val pairs = minhashPairs(sigs).select("doc_a", "doc_b")
       .localCheckpoint(eager = false)
@@ -600,6 +602,18 @@ object TextQueries {
     * result. */
   private[queries] def chainOf(dd: DataFrame): DataFrame = chainAndErepOf(dd)._1
 
+  /** One MinHash signature per CC cluster: CC `labels` (doc_id, rep) over
+    * the members' `sigs` (doc_id, sig), grouped by rep → (rep, n_docs,
+    * csig). The element-wise min of member signatures is the signature of
+    * the union of their shingle sets (MinHashUnion; ClusterDedupSpec proves
+    * the identity). The udaf applies as a column function, so the session's
+    * function registry stays untouched. */
+  private[graft] def clusterSigsOf(labels: DataFrame, sigs: DataFrame): DataFrame = {
+    val minhashUnion = udaf(new graft.functions.MinHashUnion(32)).withName("graft_minhash_union")
+    labels.join(sigs, Seq("doc_id")).groupBy("rep")
+      .agg(count(lit(1)).as("n_docs"), minhashUnion(col("sig")).as("csig"))
+  }
+
   /** Hierarchical corpus dedup (x26): verified near-dup pairs (x03's
     * band+verify plan) → connected components → ONE MinHash signature per
     * cluster via the MinHashUnion typed aggregator (element-wise min of
@@ -613,16 +627,10 @@ object TextQueries {
     * (rep, n_docs, n_xcands = plausible cross-cluster merge candidates at
     * estimated Jaccard ≥ 0.25 from signature agreement). */
   val dedupClusters = sql("x26_dedup_clusters", HashOracles.dedupClusters) { (s, d) =>
-    val minhashUnion = udaf(new graft.functions.MinHashUnion(32)).withName("graft_minhash_union")
     val (_, sigs, labels) = erepSigsLabelsOf(docs(s, d))
-    val clusters = labels.join(sigs, Seq("doc_id"))
-      .groupBy("rep")
-      .agg(count(lit(1)).as("n_docs"), minhashUnion(col("sig")).as("csig"))
+    val clusters = clusterSigsOf(labels, sigs)
       .localCheckpoint(eager = false) // both sides of the cross-cluster join
-    val cbands = clusters.select(col("rep"), explode(
-      transform(sequence(lit(0), lit(7)),
-        b => struct(b.as("band"), xxhash64(slice(col("csig"), b * 4 + 1, lit(4))).as("bh")))).as("b"))
-      .select(col("rep"), col("b.band"), col("b.bh"))
+    val cbands = bandRows(clusters, "csig", "rep")
     val xcand = cbands.as("l").join(cbands.as("r"), Seq("band", "bh"))
       .filter(col("l.rep") < col("r.rep"))
       .select(col("l.rep").as("rep_a"), col("r.rep").as("rep_b"))
@@ -1859,9 +1867,7 @@ object TextQueries {
     // reps (id, text) and their signatures share one GC-scoped boundary —
     // the blocking side reads sigs, the verify side reads texts
     val reps = exactReps(docs(s, d)).localCheckpoint(eager = false)
-    val sigs = reps
-      .select(col("doc_id"), shingleHashes.as("sh"))
-      .withColumn("sig", expr("graft_minhash(sh, 32)"))
+    val sigs = sketchOf(reps)
     bandCandidates(sigs)
       .join(reps.select(col("doc_id").as("doc_a"),
         substring(col("text"), 1, 80).as("ta")), Seq("doc_a"))
@@ -2124,7 +2130,7 @@ object TextQueries {
   private def manifestPlan(s: SparkSession, d: String,
       policy: SurvivorPolicy): DataFrame = {
     val qual = docs(s, d)
-      .filter(size(split(trim(col("text")), "\\s+")) >= 40)
+      .filter(nTokOfText >= 40)
       .select("doc_id", "text")
     val chain = chainOf(qual)
     val man = surviveBy(chain, docs(s, d), policy)
@@ -2439,8 +2445,9 @@ object TextQueries {
     * the edge side's exchange is paid once (the documented x26 upgrade
     * path applies verbatim). */
   val dupPagerank = sql("x69_dup_pagerank", HashOracles.dupPagerank) { (s, d) =>
-    val sigs = minhashSignaturesOf(docs(s, d)).localCheckpoint(eager = false)
-    pagerankFromWeightedPairs(weightedPairs(sigs)).orderBy("doc_id")
+    val sigs = pinnedSignatures(s, d)
+    pagerankFromWeightedPairs(weightedPairs(sigs).localCheckpoint(eager = false))
+      .orderBy("doc_id")
   }
 
   /** Verified near-dup pairs with INTEGER ppm Jaccard weights from a
@@ -2450,22 +2457,21 @@ object TextQueries {
     * of; the weights are what separate the hub from the rim). Output:
     * (doc_a, doc_b, w). */
   def weightedPairs(sigTable: DataFrame): DataFrame =
-    bandCandidates(sigTable)
+    withInterUni(bandCandidates(sigTable)
       .join(sigTable.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), Seq("doc_a"))
-      .join(sigTable.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), Seq("doc_b"))
-      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
-      .withColumn("uni",
-        (size(col("sh_a")) + size(col("sh_b"))).cast("long") - col("inter"))
+      .join(sigTable.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), Seq("doc_b")),
+      "sh_a", "sh_b")
       .filter(col("inter") * 2 >= col("uni"))
       .select(col("doc_a"), col("doc_b"), expr("(inter * 1000000L) div uni").as("w"))
 
   /** x69's iteration over any weighted pair frame (doc_a, doc_b, w): five
     * fixed power iterations, damping 0.85, all BIGINT micro-units. Output:
-    * (doc_id, deg, pr) — unordered; callers sort for presentation. */
+    * (doc_id, deg, pr) — unordered; callers sort for presentation. The
+    * frame is read twice (both edge directions), so callers pass it
+    * pinned; x73 reuses its pin for the hub attribution. */
   def pagerankFromWeightedPairs(pairs: DataFrame): DataFrame = {
-    val pw = pairs.localCheckpoint(eager = false)
-    val edges = pw.select(col("doc_a").as("src"), col("doc_b").as("dst"), col("w"))
-      .union(pw.select(col("doc_b").as("src"), col("doc_a").as("dst"), col("w")))
+    val edges = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"), col("w"))
+      .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst"), col("w")))
     val outw = edges.groupBy("src")
       .agg(sum("w").as("wout"), count(lit(1)).as("deg"))
       .localCheckpoint(eager = false)
@@ -2641,18 +2647,16 @@ object TextQueries {
     * fetch joins only candidate pairs. Nothing beyond the audited x03
     * plan plus one partial-final aggregate. */
   val lshBandStats = sql("x72_lsh_band_stats", HashOracles.lshBandStats) { (s, d) =>
-    val sigs = minhashSignaturesOf(docs(s, d)).localCheckpoint(eager = false)
-    val bands = bandRows(sigs, "doc_id").localCheckpoint(eager = false)
+    val sigs = pinnedSignatures(s, d)
+    val bands = bandRows(sigs, "sig", "doc_id").localCheckpoint(eager = false)
     val pairBands = bands.as("l").join(bands.as("r"), Seq("band", "bh"))
       .filter(col("l.doc_id") < col("r.doc_id"))
       .groupBy(col("l.doc_id").as("doc_a"), col("r.doc_id").as("doc_b"))
       .agg(count(lit(1)).as("n_bands"))
-    pairBands
+    withInterUni(pairBands
       .join(sigs.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), Seq("doc_a"))
-      .join(sigs.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), Seq("doc_b"))
-      .withColumn("inter", size(array_intersect(col("sh_a"), col("sh_b"))).cast("long"))
-      .withColumn("uni",
-        (size(col("sh_a")) + size(col("sh_b"))).cast("long") - col("inter"))
+      .join(sigs.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), Seq("doc_b")),
+      "sh_a", "sh_b")
       .withColumn("ok", (col("inter") * 2 >= col("uni")).cast("long"))
       .groupBy("n_bands")
       .agg(count(lit(1)).as("n_pairs"), sum("ok").as("n_verified"))
@@ -2675,7 +2679,7 @@ object TextQueries {
     * keeps NULL out of `least` on both engines); the rollup is a
     * partial-final aggregate over ≤ K groups. */
   val hubRemoval = sql("x73_hub_removal", HashOracles.hubRemoval) { (s, d) =>
-    val sigs = minhashSignaturesOf(docs(s, d)).localCheckpoint(eager = false)
+    val sigs = pinnedSignatures(s, d)
     val pw = weightedPairs(sigs).localCheckpoint(eager = false)
     val hubs = pagerankFromWeightedPairs(pw)
       .orderBy(col("pr").desc, col("doc_id")).limit(10)
@@ -2719,7 +2723,7 @@ object TextQueries {
     * Kernel: [[graft.operators.Triangles]] (`Ladder graph` measures the
     * orientation gap on a planted-hub graph). */
   val dupTriangles = sql("x96_dup_triangles", HashOracles.dupTriangles) { (s, d) =>
-    val sigs = minhashSignaturesOf(docs(s, d)).localCheckpoint(eager = false)
+    val sigs = pinnedSignatures(s, d)
     val pf = weightedPairs(sigs)
       .select(col("doc_a").as("a"), col("doc_b").as("b"))
     graft.operators.Triangles.tallies(pf)
@@ -2851,18 +2855,15 @@ object TextQueries {
   val dedupRecallAudit = sql(
     "x90_dedup_recall_audit",
     s"""${HashOracles.recallAudit}""") { (s, d) =>
-    val sigs = minhashSignaturesOf(docs(s, d)).localCheckpoint(eager = false)
+    val sigs = pinnedSignatures(s, d)
     val cand = bandCandidates(sigs)
     val sample = sigs
       .orderBy(md5(col("doc_id").cast("string")), col("doc_id"))
       .limit(32)
       .select(col("doc_id").as("sid"), col("sh").as("sh_s"))
-    val truth = sigs.select(col("doc_id").as("oid"), col("sh").as("sh_o"))
+    val truth = withInterUni(sigs.select(col("doc_id").as("oid"), col("sh").as("sh_o"))
       .crossJoin(broadcast(sample))
-      .filter(col("sid") =!= col("oid"))
-      .withColumn("inter", size(array_intersect(col("sh_s"), col("sh_o"))).cast("long"))
-      .withColumn("uni",
-        (size(col("sh_s")) + size(col("sh_o"))).cast("long") - col("inter"))
+      .filter(col("sid") =!= col("oid")), "sh_s", "sh_o")
       .filter(col("inter") * 2 >= col("uni"))
       .select(col("sid"),
         least(col("sid"), col("oid")).as("lo"), greatest(col("sid"), col("oid")).as("hi"))
@@ -4211,7 +4212,7 @@ object TextQueries {
     * count attaches broadcast. Exact integers end to end. */
   val dedupThresholdCurve = sql(
     "x133_dedup_threshold_curve", HashOracles.dedupThresholdCurve) { (s, d) =>
-    val sigs = minhashSignaturesOf(docs(s, d)).localCheckpoint(eager = false)
+    val sigs = pinnedSignatures(s, d)
     val pairs = weightedPairs(sigs).localCheckpoint(eager = false) // computed ONCE
     val taus = Seq(500000L, 600000L, 700000L, 800000L)
     val tp = pairs

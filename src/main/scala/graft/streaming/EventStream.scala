@@ -30,9 +30,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * streaming form. A per-window variant (budget per event-time window) is
   * expressible with the window-agg + quota shapes here, but it answers a
   * different question (windowed quota, not corpus mixture) and would not
-  * be parity-comparable to batch x53, so no twin is registered. Like the
-  * sessionize exact-gap boundary documented below, this is a semantic
-  * property of stream semantics, not an implementation gap.
+  * be parity-comparable to batch x53, so no twin is registered. This is a
+  * semantic property of stream semantics, not an implementation gap.
   *
   * Also not twinned: x115's recency-decay score. Its weights are relative
   * to the CORPUS-FINAL instant (max ts), so every new arrival re-weights
@@ -239,24 +238,18 @@ object EventStream {
   }
 
   /** Per-session rollup (the streaming twin of x46_ev_session_stats):
-    * Spark's native `session_window` merges events < `gap` apart into one
-    * window per (user, session), and the aggregation emits each session's
-    * event count and first-to-last
+    * Spark's native `session_window` merges events at most `gap` apart
+    * into one window per (user, session), and the aggregation emits each
+    * session's event count and first-to-last
     * duration once the watermark closes it (append mode: exactly-once
     * final rows, state evicted on close). This is the built-in
     * session-window aggregation; [[sessionize]] remains the
     * flatMapGroupsWithState variant for when per-EVENT assignment is
-    * needed rather than per-session rollups.
-    *
-    * EXACT-GAP BOUNDARY: the gap rule diverges from the batch query at
-    * exactly `gap`. `session_window` half-opens each window at
-    * [start, start + gap), so two events exactly `gap` apart land in TWO
-    * sessions; batch x46 (and streaming [[sessionize]]) split only when
-    * the silence EXCEEDS the gap (`gap_us > 1800000000`), so the same two
-    * events share ONE session. The parity test passes because the shipped
-    * corpus has no exact-gap pair (microsecond timestamps make one
-    * vanishingly rare); pipelines where exact-gap events matter should use
-    * [[sessionize]], whose rule matches batch bit-for-bit. */
+    * needed rather than per-session rollups. `session_window` merges an
+    * event that starts AT a session's end `t + gap`, so a new session
+    * starts only when the silence EXCEEDS `gap` — batch x46's
+    * `gap_us > 1800000000` rule (EventStreamSpec's parity test pins both
+    * sides of the boundary). */
   def sessionStats(events: DataFrame, gap: String = "30 minutes",
       lateness: String = "10 minutes"): DataFrame =
     events

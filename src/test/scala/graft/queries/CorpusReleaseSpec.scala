@@ -146,6 +146,24 @@ class CorpusReleaseSpec extends AnyFunSuite with Matchers with SparkTestBase {
     rows.map(r => r.getLong(4) - r.getLong(5)).sum should be > 0L // near-dup bites
   }
 
+  test("x59/x116 release gate: 40 whitespace tokens pass, 39 fail, padding never counts") {
+    import spark.implicits._
+    // registry: x59_release_manifest x116_curation_funnel
+    def doc(prefix: String, n: Int, pad: Boolean): String =
+      if (pad) (1 to n).map(i => s"$prefix$i").mkString("  ", "  ", "  ")
+      else (1 to n).map(i => s"$prefix$i").mkString(" ")
+    val dir = java.nio.file.Files.createTempDirectory("gate40").toString
+    Seq((1L, doc("a", 40, pad = false)), (2L, doc("b", 39, pad = false)),
+        (3L, doc("c", 40, pad = true)), (4L, doc("d", 39, pad = true)))
+      .map { case (id, t) => (id, "web", "en", t, t.length.toLong) }
+      .toDF("doc_id", "source", "lang", "text", "n_chars")
+      .write.parquet(s"$dir/documents.parquet")
+    TextQueries.releaseManifest.run(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet shouldBe Set((1L, 1L), (3L, 1L))
+    TextQueries.curationFunnel.run(spark, dir).collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getLong(3))) shouldBe Array(("web", 4L, 2L))
+  }
+
   test("x118 shard balance: reconciles with x59, exact share arithmetic, deviations sum to ~0") {
     // columns: shard, n_clusters, n_docs_rep, n_tokens, tok_share_ppm, dev_ppm
     // registry: x118_shard_balance

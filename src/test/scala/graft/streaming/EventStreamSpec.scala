@@ -365,34 +365,57 @@ class EventStreamSpec extends AnyFunSuite with Matchers with SparkTestBase {
 
   test("session_window rollup parity: streamed sessions ≡ batch x46 on the same rows") {
     import spark.implicits._
-    val dir = "/root/testdata/sf0.001"
-    val ev = graft.Tables.events(spark, dir)
-      .select("user_id", "ts").collect()
-      .map(r => (r.getLong(0), r.getTimestamp(1)))
-      .sortBy(_._2.getTime)
-    val input = MemoryStream[(Long, Timestamp)]
-    val q = EventStream.sessionStats(input.toDF.toDF("user_id", "ts"))
-      .writeStream.format("memory").queryName("sess46").outputMode("append").start()
-    try {
-      input.addData(ev.toSeq)
-      q.processAllAvailable()
-      // a far-future sentinel (user -1) advances the watermark so every
-      // real session closes and appends its final row
-      val sentinelTs = new Timestamp(ev.map(_._2.getTime).max + 86400000L)
-      input.addData((-1L, sentinelTs))
-      q.processAllAvailable()
-      def key(r: org.apache.spark.sql.Row) = (r.getLong(0), r.getLong(1), r.getLong(2))
-      val got = spark.table("sess46").collect()
-        .map(key).filter(_._1 >= 0).groupBy(identity).view.mapValues(_.length).toMap
-      // batch x46 emits (user, session_id, n, duration); compare the
-      // (user, n, duration) multiset — streaming windows carry no ordinal
-      // registry: x46_ev_session_stats
-      val want = graft.queries.EventsQueries.sessionStats.run(spark, dir)
-        .select("user_id", "n_events", "duration_us").collect()
-        .map(key).groupBy(identity).view.mapValues(_.length).toMap
-      got shouldBe want
-      got should not be empty
-    } finally q.stop()
+    def key(r: org.apache.spark.sql.Row) = (r.getLong(0), r.getLong(1), r.getLong(2))
+    /** (user, n_events, duration_us) multiset of the streamed sessions and
+      * of batch x46, both over `dir`'s events. */
+    def streamedAndBatch(dir: String, name: String) = {
+      val ev = graft.Tables.events(spark, dir)
+        .select("user_id", "ts").collect()
+        .map(r => (r.getLong(0), r.getTimestamp(1)))
+        .sortBy(_._2.getTime)
+      val input = MemoryStream[(Long, Timestamp)]
+      val q = EventStream.sessionStats(input.toDF.toDF("user_id", "ts"))
+        .writeStream.format("memory").queryName(name).outputMode("append").start()
+      try {
+        input.addData(ev.toSeq)
+        q.processAllAvailable()
+        // a far-future sentinel (user -1) advances the watermark so every
+        // real session closes and appends its final row
+        val sentinelTs = new Timestamp(ev.map(_._2.getTime).max + 86400000L)
+        input.addData((-1L, sentinelTs))
+        q.processAllAvailable()
+        val got = spark.table(name).collect()
+          .map(key).filter(_._1 >= 0).groupBy(identity).view.mapValues(_.length).toMap
+        // batch x46 emits (user, session_id, n, duration); compare the
+        // (user, n, duration) multiset — streaming windows carry no ordinal
+        // registry: x46_ev_session_stats
+        val want = graft.queries.EventsQueries.sessionStats.run(spark, dir)
+          .select("user_id", "n_events", "duration_us").collect()
+          .map(key).groupBy(identity).view.mapValues(_.length).toMap
+        (got, want)
+      } finally q.stop()
+    }
+    val (got, want) = streamedAndBatch("/root/testdata/sf0.001", "sess46")
+    got shouldBe want
+    got should not be empty
+
+    // exact-gap boundary: user 1's two events are exactly 30 min apart (one
+    // session), user 2's are 30 min + 1 µs apart (two sessions)
+    val tmp = java.nio.file.Files.createTempDirectory("sess-gap").toString
+    val gapUs = 1800000000L
+    val t0 = Timestamp.valueOf("2026-01-01 10:00:00")
+    def at(us: Long) = {
+      val t = new Timestamp(t0.getTime + us / 1000)
+      t.setNanos(((us % 1000000) * 1000).toInt)
+      t
+    }
+    Seq((1L, 1L, 0L), (2L, 1L, gapUs), (3L, 2L, 0L), (4L, 2L, gapUs + 1))
+      .map { case (id, u, us) => (id, at(us), u, "view", 1.0, "{}") }
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .write.parquet(s"$tmp/events.parquet")
+    val (gotGap, wantGap) = streamedAndBatch(tmp, "sess46gap")
+    gotGap shouldBe Map((1L, 2L, gapUs) -> 1, (2L, 1L, 0L) -> 2)
+    gotGap shouldBe wantGap
   }
 
   test("funnel parity: last streamed snapshot per user ≡ batch x32 on the same rows") {
