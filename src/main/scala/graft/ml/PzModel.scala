@@ -8,6 +8,8 @@ import org.apache.spark.ml.tuning.{CrossValidator, ParamGridBuilder}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.Par
+
 /** Expected-%PZ/s models (`Final_Scripts/Model Construction.R`): caret's
   * lm / rf / xgbTree / xgbLinear stack re-expressed as Spark MLlib pipelines
   * (SURVEY.md §2.1 K1-K10).
@@ -65,33 +67,45 @@ object PzModel {
     * paired). `repeats` seeds emulate caret's repeatedcv.
     *
     * Scale: each fold's train/test split is a filter on a precomputed fold
-    * column (no reshuffle per fold); the fold-assigned frame is cached for
-    * the duration of one repeat and released after. */
+    * column (no reshuffle per fold); each repeat's fold-assigned frame is
+    * cached for the duration of the call, and one action per repeat counts
+    * its folds. The (repeat, fold, model) cells are fitted concurrently
+    * through `graft.Par`, up to the session's cores: a fit is bound by job
+    * latency, so one cell's driver time hides behind another's jobs. Every
+    * cell is an independent fit, so the rows, their order and their RMSEs
+    * are those of a serial loop. */
   def compareModels(df: DataFrame, models: Seq[String] = Seq("linear", "rf", "gbt", "ridge"),
       numFolds: Int = 10, repeats: Int = 1, seed: Long = 99L): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
     val evaluator = new RegressionEvaluator()
       .setLabelCol(labelCol).setPredictionCol("prediction").setMetricName("rmse")
-    val rows = (0 until repeats).flatMap { r =>
-      val folded = df.withColumn("__fold",
-        floor(rand(seed + r) * numFolds).cast("int")).persist()
-      try {
-        (0 until numFolds).flatMap { k =>
-          val train = folded.filter(col("__fold") =!= k).drop("__fold")
-          val test = folded.filter(col("__fold") === k).drop("__fold")
-          // rand-based assignment is multinomial, not a strict partition: on
-          // tiny inputs a fold can come up empty — skip it (an empty test
-          // fold would make the evaluator throw/NaN and poison the mean)
-          if (test.isEmpty || train.isEmpty) Seq.empty
-          else models.map { m =>
+    val folded = (0 until repeats).map { r =>
+      df.withColumn("__fold", floor(rand(seed + r) * numFolds).cast("int")).persist()
+    }
+    try {
+      val cells = folded.zipWithIndex.flatMap { case (f, r) =>
+        val sizes = f.groupBy("__fold").count().collect()
+          .map(row => row.getInt(0) -> row.getLong(1)).toMap
+        val total = sizes.values.sum
+        // rand-based assignment is multinomial, not a strict partition: on
+        // tiny inputs a fold can come up empty, or hold every row — skip it
+        // (an empty test fold would make the evaluator throw/NaN and poison
+        // the mean, an empty train fold cannot be fitted)
+        (0 until numFolds).filter { k =>
+          val n = sizes.getOrElse(k, 0L)
+          n > 0 && n < total
+        }.flatMap { k =>
+          val train = f.filter(col("__fold") =!= k).drop("__fold")
+          val test = f.filter(col("__fold") === k).drop("__fold")
+          models.map { m => () =>
             val fitted = pipeline(m, seed = seed + r).fit(train)
             (m, r, k, evaluator.evaluate(fitted.transform(test)))
           }
         }
-      } finally { folded.unpersist(); () }
-    }
-    rows.toDF("model", "repeat", "fold", "rmse")
+      }
+      Par.all(spark)(cells).toDF("model", "repeat", "fold", "rmse")
+    } finally folded.foreach(_.unpersist())
   }
 
   /** K-fold CV RMSE for one pipeline (MC:16's trainControl): the mean of the

@@ -929,16 +929,6 @@ FROM chain c JOIN creps USING (rep) LEFT JOIN seeds s ON s.train_id = c.doc_id
 ORDER BY c.doc_id"""
   }
 
-  /** x147: dup-cluster size × quality LINK — per log2 cluster-size bucket
-    * (x119's integer CASE ladder over the FULL-corpus x51 chain), the
-    * x64 composite-gate pass rate of the documents in those clusters: the
-    * cross-family readout dedup papers publish (heavily duplicated text
-    * skews toward boilerplate — if pass_ppm falls with cluster size here,
-    * dedup and the quality gate agree about what to cut; if it rises,
-    * near-dup mass is GOOD text being over-represented and
-    * survivor-selection is the right treatment, not dropping). `gate` is
-    * TextQueries.gatePassSql("toks"), passed in for the same
-    * one-place/no-init-cycle reasons as releasePackBridge. */
   /** x156: dedup SURVIVORSHIP-BIAS datasheet — per source, the x64 gate
     * pass rate over ALL docs vs over the x51 keep-min-id survivors, and
     * the signed delta. The same chain + gate pieces as [[dupQualityLink]],
@@ -964,6 +954,16 @@ SELECT a.source, a.n_docs, a.n_pass,
      - a.n_pass * 1000000 // a.n_docs AS BIGINT) AS delta_ppm
 FROM al a LEFT JOIN sv s USING (source) ORDER BY a.source"""
 
+  /** x147: dup-cluster size × quality LINK — per log2 cluster-size bucket
+    * (x119's integer CASE ladder over the FULL-corpus x51 chain), the
+    * x64 composite-gate pass rate of the documents in those clusters: the
+    * cross-family readout dedup papers publish (heavily duplicated text
+    * skews toward boilerplate — if pass_ppm falls with cluster size here,
+    * dedup and the quality gate agree about what to cut; if it rises,
+    * near-dup mass is GOOD text being over-represented and
+    * survivor-selection is the right treatment, not dropping). `gate` is
+    * TextQueries.gatePassSql("toks"), passed in for the same
+    * one-place/no-init-cycle reasons as releasePackBridge. */
   def dupQualityLink(gate: String): String = {
     val bucketCase = (0 until 20)
       .map(b => s"WHEN sz < ${2L << b} THEN $b")

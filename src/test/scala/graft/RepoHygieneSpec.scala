@@ -200,6 +200,34 @@ class RepoHygieneSpec extends AnyFunSuite with Matchers {
     named.filterNot { case (_, obj) => runnable(obj) } shouldBe empty
   }
 
+  test("graft/Par.scala is the only place src/main builds a thread pool") {
+    // one bounded-concurrency primitive: a second pool would escape Par's
+    // core cap, its local-property inheritance and its join-before-return
+    val poolRx = raw"Executors\.new|new ThreadPoolExecutor|ExecutionContext\.from|new ForkJoinPool|ThreadUtils\.".r
+    val mainRoot = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(mainRoot),
+      s"spec must run from the repo root (no $mainRoot)")
+    val par = mainRoot.resolve("graft/Par.scala")
+    assert(java.nio.file.Files.isRegularFile(par), s"$par is missing")
+    val walk = java.nio.file.Files.walk(mainRoot)
+    val offenders = try {
+      import scala.jdk.CollectionConverters._
+      walk.iterator().asScala
+        .filter(p => p.toString.endsWith(".scala") && p != par)
+        .flatMap { p =>
+          val text = new String(java.nio.file.Files.readAllBytes(p), "UTF-8")
+          poolRx.findAllIn(text).map(m => s"$p: $m")
+        }.toList
+    } finally walk.close()
+    // the detector detects every pattern
+    Seq("Executors.newFixedThreadPool(2)", "new ThreadPoolExecutor(", "ExecutionContext.fromExecutor(e)",
+      "new ForkJoinPool(4)", "ThreadUtils.newDaemonFixedThreadPool(2, \"x\")")
+      .foreach(probe => withClue(probe)(poolRx.findFirstIn(probe) shouldBe defined))
+    withClue("thread pools outside graft/Par.scala (use Par.all): ") {
+      offenders shouldBe empty
+    }
+  }
+
   test("repo root has no unexpected files") {
     // tests run from the repo root — don't hardcode a checkout path, and
     // treat an unreadable root as a FAILURE, not a vacuous pass

@@ -68,6 +68,54 @@ class PzModelSpec extends AnyFunSuite with Matchers with SparkTestBase {
     linMean shouldBe PzModel.cvRmse(training, "linear", numFolds = 3, repeats = 1) +- 1e-12
   }
 
+  test("compareModels' concurrent cells equal a serial fit loop exactly (K1/K6)") {
+    import org.apache.spark.ml.evaluation.RegressionEvaluator
+    import org.apache.spark.sql.functions.{col, floor, rand}
+    // one partition: a multi-partition aggregate merges task results in
+    // completion order, so its last bits can differ between any two runs,
+    // serial ones included; on one partition every fit is deterministic
+    val df = training.coalesce(1)
+    val models = Seq("linear", "rf", "gbt", "ridge")
+    val (numFolds, repeats, seed) = (3, 2, 7L)
+    val evaluator = new RegressionEvaluator()
+      .setLabelCol(labelCol).setPredictionCol("prediction").setMetricName("rmse")
+    val serial = for {
+      r <- 0 until repeats
+      folded = df.withColumn("__fold", floor(rand(seed + r) * numFolds).cast("int"))
+      k <- 0 until numFolds
+      m <- models
+    } yield {
+      val train = folded.filter(col("__fold") =!= k).drop("__fold")
+      val test = folded.filter(col("__fold") === k).drop("__fold")
+      val fitted = PzModel.pipeline(m, seed = seed + r).fit(train)
+      (m, r, k, evaluator.evaluate(fitted.transform(test)))
+    }
+    val concurrent = PzModel.compareModels(df, models, numFolds, repeats, seed).collect()
+      .map(row => (row.getString(0), row.getInt(1), row.getInt(2), row.getDouble(3))).toSeq
+    serial.size shouldBe models.size * numFolds * repeats
+    concurrent shouldBe serial // same rows, same order, RMSEs exactly ==
+  }
+
+  test("compareModels skips exactly the folds with no train or no test side, on 3 rows") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{floor, rand}
+    val tiny = Seq((1.0, 0.0, 0.10), (2.0, 1.0, 0.25), (3.0, 0.0, 0.05))
+      .toDF("Blockers_All", "is_play_action", labelCol)
+    val (numFolds, repeats, seed) = (5, 4, 99L)
+    val expected = for {
+      r <- 0 until repeats
+      folds = tiny.select(floor(rand(seed + r) * numFolds).cast("int")).as[Int].collect()
+      k <- 0 until numFolds
+      n = folds.count(_ == k)
+      if n > 0 && n < folds.length
+    } yield (r, k)
+    val rows = PzModel.compareModels(tiny, Seq("linear"), numFolds, repeats, seed).collect()
+    rows.map(row => (row.getInt(1), row.getInt(2))).toSeq shouldBe expected
+    all(rows.map(_.getDouble(3))) should be >= 0.0
+    // non-vacuity: 3 rows over 5 folds always leave empty folds to skip
+    expected.size should be < repeats * numFolds
+  }
+
   test("RFE ranks and scores feature subsets (WIP:241-274, K9)") {
     val out = PzModel.rfe(training, Seq("Blockers_All", "is_play_action"),
       numFolds = 3).collect()
