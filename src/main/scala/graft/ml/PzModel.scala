@@ -72,8 +72,12 @@ object PzModel {
     * its folds. The (repeat, fold, model) cells are fitted concurrently
     * through `graft.Par`, up to the session's cores: a fit is bound by job
     * latency, so one cell's driver time hides behind another's jobs. Every
-    * cell is an independent fit, so the rows, their order and their RMSEs
-    * are those of a serial loop. */
+    * cell is an independent fit, so the rows and their order are those of a
+    * serial loop. On single-partition input the RMSEs are identical to it
+    * too. On several partitions a fit's aggregates merge task results in
+    * completion order, so its RMSEs can differ in the last bits between any
+    * two runs, serial ones included; running cells at once can vary that
+    * order more often, and the result is equal only up to that rounding. */
   def compareModels(df: DataFrame, models: Seq[String] = Seq("linear", "rf", "gbt", "ridge"),
       numFolds: Int = 10, repeats: Int = 1, seed: Long = 99L): DataFrame = {
     val spark = df.sparkSession
