@@ -1,144 +1,9 @@
 package graft
 import org.apache.spark.sql.SparkSession
+
+/** Host probes that stamp every timing line ([[Ladder]] and the repo
+  * benchmark): the 1-minute load average and a fixed calibration job. */
 object Bench {
-
-  /** The previous round's artifact, as far as self-adjudication needs it:
-    * the round number, the per-query min map (short keys), and the run's
-    * own noise band. */
-  final case class PrevBench(round: Int, queries: Map[String, Double], noise: Double,
-                             sf: String = "")
-
-  /** Load the newest committed BENCH_r{N}.json from `dir` (the repo root
-    * when the driver runs the bench) and extract the inner artifact line.
-    * The committed file is the DRIVER's wrapper — {n, rc, tail, parsed} —
-    * whose `parsed` has been null for rounds 12-15 (the tail capture holds
-    * the line but the driver never re-parses it), so this reads the line
-    * out of `tail` itself: last `{"metric":"total"` to its balanced `}`.
-    * Tolerant by design — any failure (no files, truncated line, format
-    * drift) returns None and the artifact simply omits the ratio fields;
-    * a bench run must never die on history. */
-  def loadPrevBench(dir: String = "."): Option[PrevBench] = try {
-    val rx = "^BENCH_r(\\d+)\\.json$".r
-    val files = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-      .flatMap(f => f.getName match {
-        case rx(n) => Some((n.toInt, f))
-        case _ => None
-      })
-    if (files.isEmpty) None
-    else {
-      val (round, f) = files.maxBy(_._1)
-      val text = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
-      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      val root = mapper.readTree(text)
-      // wrapper `parsed` if the driver ever starts filling it; else the tail
-      val inner =
-        if (root.has("parsed") && !root.get("parsed").isNull) root.get("parsed")
-        else {
-          val tail = if (root.has("tail")) root.get("tail").asText() else text
-          val start = tail.lastIndexOf("{\"metric\":\"total\"")
-          if (start < 0) return None
-          // balanced-brace scan — artifact values never contain braces
-          var depth = 0; var end = -1; var i = start
-          while (i < tail.length && end < 0) {
-            tail.charAt(i) match {
-              case '{' => depth += 1
-              case '}' => depth -= 1; if (depth == 0) end = i
-              case _ =>
-            }
-            i += 1
-          }
-          if (end < 0) return None
-          mapper.readTree(tail.substring(start, end + 1))
-        }
-      import scala.jdk.CollectionConverters._
-      val qNode = inner.get("queries")
-      val qs =
-        if (qNode != null)
-          qNode.fieldNames().asScala.map(k => k -> qNode.get(k).asDouble()).toMap
-        else {
-          // the packed last-resort rung: `k:v` pairs space-separated in
-          // ONE string field (see renderRungs' ladder comment)
-          val p = inner.get("queries_packed")
-          if (p == null) return None
-          // Front-truncation of the 2000-char tail capture can leave the
-          // FIRST token mangled (no colon, or a clipped value). One bad
-          // token must not abort the whole load — skip it and keep every
-          // rung that did survive, so self-adjudication degrades to
-          // partial coverage instead of silently switching off.
-          p.asText().split(' ').iterator.filter(_.nonEmpty).flatMap { kv =>
-            val c = kv.lastIndexOf(':')
-            if (c <= 0) None
-            else kv.substring(c + 1).toDoubleOption.map(kv.substring(0, c) -> _)
-          }.toMap
-        }
-      val noise = if (inner.has("noise")) inner.get("noise").asDouble() else 1.0
-      val sf = if (inner.has("sf")) inner.get("sf").asText() else ""
-      Some(PrevBench(round, qs, noise, sf))
-    }
-  } catch { case scala.util.control.NonFatal(_) => None }
-
-  /** Per-query regression verdicts vs the previous artifact, discounted by
-    * both runs' noise bands (r15 verdict item 1: min-of-3 + sparse
-    * calibration can all sit inside one contended window, so the artifact
-    * must carry the prior-round comparison itself instead of leaving the
-    * judge to re-run the bench). For each query present in both rounds:
-    *   discounted = (cur / max(prev, 0.2)) / max(noise_prev, noise_now, 1)
-    * — the 0.2 s floor absorbs the %.1f quantization of fast prev rows,
-    * the noise divisor is the read rule the r14 band introduced, applied.
-    * A row is REGRESSED when discounted > 2 and cur ≥ 0.5 s (an absolute
-    * floor so rounding jitter on sub-half-second rows never flags).
-    * Returns worst-first, capped at 8 (the cap itself is diagnostic: 8
-    * flagged rows means the host, not 8 independent plan changes). */
-  def regressedRows(cur: Seq[(String, Double)], prev: PrevBench,
-                    noiseNow: Double): Seq[(String, Double)] = {
-    val discount = math.max(math.max(prev.noise, noiseNow), 1.0)
-    cur.flatMap { case (k, t) =>
-      prev.queries.get(k) match {
-        case Some(p) if p > 0 && t >= 0.5 =>
-          val disc = t / math.max(p, 0.2) / discount
-          if (disc > 2.0) Some(k -> disc) else None
-        case _ => None
-      }
-    }.sortBy(-_._2).take(8)
-  }
-
-  /** Fixed deterministic calibration job: 64M `range` ids hashed and summed
-    * on the session's full parallelism — no I/O, no shuffle, constant work.
-    * Its wall time measures HOST capacity at that instant, so samples taken
-    * through the run let a reader separate contention from regression: if
-    * the calibration rows are inflated over the documented calm-window
-    * value (PLANS.md "bench calibration"), every query row in the same
-    * stretch is inflated by host load, not by a plan change. (Round-4
-    * lesson: a loaded window recorded 23.0 s for a query that measures
-    * 1.93 s calm, and nothing in the artifact could prove it was noise.) */
-  /** r20 measurement fix (this round's own b1 cut was inflated by evening
-    * host load exactly as r19's driver artifact was): indexes of queries
-    * whose min-of-3 BOTH exceeds twice their previous-round price (0.2 s
-    * floor, 0.5 s absolute floor — regressedRows' quantization guards) AND
-    * ran inside a contention-marked stretch (an adjacent calibration
-    * sample ≥ 1 s, the verify-skill read rule) — the rows worth ONE
-    * post-sweep re-time each, when the contention may have passed. Pure
-    * function so BenchSanitySpec can pin the selector without running
-    * queries; capped at 12 rows so a fully-hot run costs at most ~12
-    * extra timings. Re-timing only APPENDS samples — the shipped min can
-    * only improve, never worsen, so a still-hot re-time is harmless. */
-  def retimeCandidates(samples: Seq[(String, Seq[Double])], prev: Option[PrevBench],
-      calibration: Seq[Double]): Seq[Int] = prev match {
-    case None => Seq.empty
-    case Some(p) =>
-      samples.zipWithIndex.flatMap { case ((k, ts), i) =>
-        val cur = ts.min
-        // calibration sample j is taken just before query 16·j, so the
-        // stretch holding query i is bracketed by samples i/16 and i/16+1
-        val lo = math.min(i / 16, math.max(calibration.size - 1, 0))
-        val hi = math.min(lo + 1, math.max(calibration.size - 1, 0))
-        val hot = calibration.nonEmpty && calibration.slice(lo, hi + 1).exists(_ >= 1.0)
-        p.queries.get(shortKey(k)) match {
-          case Some(pv) if cur >= 0.5 && hot && cur / math.max(pv, 0.2) > 2.0 => Some(i)
-          case _ => None
-        }
-      }.take(12)
-  }
 
   /** First /proc/loadavg figure at artifact time (1-minute host load) —
     * ~12 B that let a reader see residual contention the calibration
@@ -150,6 +15,15 @@ object Bench {
     s.split("\\s+").headOption.flatMap(_.toDoubleOption)
   } catch { case scala.util.control.NonFatal(_) => None }
 
+  /** Fixed deterministic calibration job: 64M `range` ids hashed and summed
+    * on the session's full parallelism — no I/O, no shuffle, constant work.
+    * Its wall time measures HOST capacity at that instant, so samples taken
+    * through the run let a reader separate contention from regression: if
+    * the calibration rows are inflated over the documented calm-window
+    * value (PLANS.md "bench calibration"), every query row in the same
+    * stretch is inflated by host load, not by a plan change. (Round-4
+    * lesson: a loaded window recorded 23.0 s for a query that measures
+    * 1.93 s calm, and nothing in the artifact could prove it was noise.) */
   def calibrate(spark: SparkSession): Double = {
     import org.apache.spark.sql.functions.{bit_xor, xxhash64, col}
     val parallelism = spark.sparkContext.defaultParallelism
@@ -159,370 +33,5 @@ object Bench {
       .select(xxhash64(col("id")).as("h"))
       .agg(bit_xor(col("h"))).head()
     (System.nanoTime() - t0) / 1e9
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Ladder.localSession()
-    // OFF, not WARN: the driver's 2000-char tail capture opened
-    // mid-stack-trace in r12 AND r13 — benign in-run spam (DAGScheduler
-    // "non-existent accumulator" ERRORs from cancelled noop jobs,
-    // BlockManager re-add WARNs) landed immediately before the artifact
-    // line and the driver's `parsed` field stayed null. Nothing in the
-    // bench needs Spark's logs: a failing query is caught, recorded as -1,
-    // and reported on OUR stderr via the `[bench] <name>: <err>` lines.
-    // Untimed warm-up: pay one-time session costs (codegen compiler, parquet
-    // footer cache, JIT) outside the per-query timings.
-    try SparkEntry.entry(spark).write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
-    // Calibration samples: one before the loop, one after every 16th query,
-    // one at the end — emitted in the JSON so a contended window is
-    // self-evident from the artifact alone (compare against the calm value
-    // in PLANS.md; inflated samples ⇒ inflated neighbors are host noise).
-    val calibration = scala.collection.mutable.ArrayBuffer.empty[Double]
-    calibrate(spark) // untimed JIT warm-up of the calibration job itself
-    calibration += calibrate(spark)
-    // Distributed IVF training (KMeans over the embeddings table), timed as
-    // its own capability metric (`ivf_train_sec`). NOTE: x17 no longer
-    // consumes this build — since round 6 it probes the COMMITTED IvfPinned
-    // centroids (the durable index artifact), so this row measures what a
-    // periodic index-refresh job would cost, not anything on x17's path.
-    val tIvf = System.nanoTime()
-    val ivfTrain =
-      try {
-        graft.queries.SimilarityQueries.ivfCentroids(spark, sfDir)
-        (System.nanoTime() - tIvf) / 1e9
-      } catch { case e: Throwable => System.err.println(s"[bench] ivf train: $e"); -1.0 }
-    // noop sink: forces full materialization of every output column
-    // (count() would let Catalyst prune the projections → flattering times).
-    // Each query runs three times back-to-back and reports the min —
-    // steady-state cost with codegen/JIT/footer-cache noise removed AND
-    // one extra sample against transient host load (the round-2 bench
-    // recorded 2-4× phantom regressions from a loaded machine; min-of-3
-    // makes a single slow run unable to pollute the reported number).
-    // A query that throws records -1, never a partial elapsed time.
-    val samples = SparkEntry.defs.zipWithIndex.map { case (q, i) =>
-      if (i > 0 && i % 16 == 0) calibration += calibrate(spark)
-      val times = (1 to 3).map { _ =>
-        val t0 = System.nanoTime()
-        try { q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9 }
-        catch { case e: Throwable => System.err.println(s"[bench] ${q.name}: $e"); -1.0 }
-      }
-      q.name -> (if (times.exists(_ < 0)) Seq(-1.0) else times)
-    }
-    val results = samples.map { case (k, ts) => k -> ts.min }
-    // Durable-index steady state: write the MinHash signature artifact once
-    // (untimed — the amortized build, like the IVF KMeans above), then time
-    // the probe-only dedup that reads it back — what every session after
-    // the first pays instead of x03's sketch+band+verify.
-    val probeOnly =
-      try {
-        val idx = java.nio.file.Files.createTempDirectory("bench-mh").toString + "/sigs"
-        graft.queries.TextQueries.saveMinhashIndex(spark, sfDir, idx)
-        val t0 = System.nanoTime()
-        graft.queries.TextQueries.dedupMinhashFromIndex(spark, idx)
-          .write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      } catch { case e: Throwable => System.err.println(s"[bench] mh probe: $e"); -1.0 }
-    calibration += calibrate(spark)
-    // r20 load-robust re-time (see retimeCandidates): one extra timing for
-    // rows that read >2× their previous-round price inside a
-    // contention-marked stretch, taken now that the sweep (and possibly
-    // the contention) is over. Samples are appended, so min only improves.
-    val prevBench = loadPrevBench()
-    val samples2 = {
-      val flagged = retimeCandidates(samples, prevBench, calibration.toSeq).toSet
-      if (flagged.isEmpty) samples
-      else samples.zipWithIndex.map { case ((k, ts), i) =>
-        if (!flagged(i)) (k, ts)
-        else {
-          val t0 = System.nanoTime()
-          val re = try {
-            SparkEntry.defs(i).run(spark, sfDir)
-              .write.format("noop").mode("overwrite").save()
-            Some((System.nanoTime() - t0) / 1e9)
-          } catch { case _: Throwable => None } // keep the sweep's samples
-          (k, ts ++ re.toSeq)
-        }
-      }
-    }
-    // Tail guard: lead the artifact with dash padding wider than the
-    // window slack (2000 − line − "[success]" trailer ≈ 250 bytes), so
-    // wherever the driver's tail capture opens, everything before the
-    // line is inert padding with no '{' and the artifact is the first
-    // JSON a parser finds. NOT blank lines: sbt's fork logger drops
-    // empty stdout lines entirely (measured r14 — a "\n"*512 guard never
-    // reached the log), so the padding must be non-empty content.
-    (1 to 3).foreach(_ => println("-" * 200))
-    println(renderJson(samples2, calibration.toSeq, ivfTrain, probeOnly, sfDir,
-      prevBench, correctnessAttestation(), loadAvg1()))
-    spark.stop()
-    // A run with failed queries must not look like a clean run to the round
-    // gate (round-9 lesson: 22 failures rode in under rc=0 and were nearly
-    // certified). The artifact line is already printed, so the nonzero exit
-    // costs nothing but makes the driver's rc field honest.
-    if (samples.exists(_._2.min < 0)) sys.exit(1)
-  }
-
-  /** Correctness attestation for the bench tail (r18 verdict item 2): the
-    * driver's CORRECTNESS_r{N}.json channel arrived empty in rounds 16-18
-    * while the bench tail demonstrably survives every round — so the tail
-    * itself carries the oracle-gate count, read from the committed
-    * CORRECTNESS_local_r{N}_sf*.json artifacts (cut by diffcheck --json at
-    * final gates; RepoHygieneSpec pins them fresh and all-green against
-    * the live registry). Renders the NEWEST round's files as
-    * "r19:184/184@sf0.01,184/184@sf0.1" — green = rows+schema+hash all
-    * true with a null err, the same predicate RepoHygieneSpec enforces.
-    * None (field omitted) when no artifact is readable: the bench must
-    * never die on attestation, and a missing field is itself legible.
-    *
-    * Staleness cross-check (r19 advice): the artifacts attest a PAST
-    * gate run, so an artifact whose entry set no longer equals the live
-    * registry (a query added or renamed since the cut) must not render
-    * as a clean green count — such a file gets a "(stale)" suffix on its
-    * fraction, computed against SparkEntry.defs at attestation time.
-    * RepoHygieneSpec separately FAILS the build on the same drift; the
-    * suffix makes the bench line self-describing even when the bench is
-    * run outside the test gate. */
-  def correctnessAttestation(dir: String = "."): Option[String] = try {
-    val rx = "^CORRECTNESS_local_r(\\d+)_(sf[0-9.]+)\\.json$".r
-    val files = Option(new java.io.File(dir).listFiles()).getOrElse(Array.empty)
-      .flatMap(f => f.getName match {
-        case rx(n, sf) => Some((n.toInt, sf, f))
-        case _ => None
-      })
-    if (files.isEmpty) None
-    else {
-      val round = files.map(_._1).max
-      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-      import scala.jdk.CollectionConverters._
-      val registry = SparkEntry.defs.map(_.name).toSet
-      val per = files.filter(_._1 == round).sortBy(_._2).map { case (_, sf, f) =>
-        val root = mapper.readTree(f)
-        val entries = root.fieldNames().asScala.toSeq
-        val green = entries.count { q =>
-          val e = root.get(q)
-          Seq("rows_match", "schema_match", "hash_match").forall(k =>
-            e.has(k) && e.get(k).asBoolean(false)) &&
-            (!e.has("err") || e.get("err").isNull)
-        }
-        val stale = if (entries.toSet == registry) "" else "(stale)"
-        s"$green/${entries.size}@$sf$stale"
-      }
-      Some(s"r$round:" + per.mkString(","))
-    }
-  } catch { case scala.util.control.NonFatal(_) => None }
-
-  /** `%.2f` (Locale.ROOT, like [[Ladder.d3]]) for the per-query rows:
-    * 10 ms resolution is ample for a baseline comparison (calm rows
-    * measure 0.1–4 s) and the lost byte per row is exactly the line's
-    * scarcest resource — at 123 registry rows the map is ~92% of the
-    * artifact. */
-  private def d2(x: Double): String =
-    String.format(java.util.Locale.ROOT, "%.2f", Double.box(x))
-
-  /** `%.1f` — the last rung of the self-sizing ladder (see renderJson). */
-  private def d1(x: Double): String =
-    String.format(java.util.Locale.ROOT, "%.1f", Double.box(x))
-
-  /** Short artifact key for a registry name: its id prefix (`q01`, `x31`).
-    * Registry ids are unique by construction (BenchSanitySpec asserts it),
-    * and the full name is recoverable from `SparkEntry.defs`. */
-  def shortKey(name: String): String = name.takeWhile(_ != '_')
-
-  /** Renders the one-line bench artifact. Factored out of main so
-    * BenchSanitySpec can pin the artifact contract (query keys = the
-    * registry, calibration present, line fits the driver's tail capture)
-    * without running the queries.
-    *
-    * Shape is sized for the driver's tail capture, which rounds 7-9 proved
-    * is a HARD 2000 chars including sbt's trailing "[success]" line (the
-    * r6 two-map line was ~6.2 KB, the r7 merged-[min,max] line ~4.6 KB —
-    * both truncated from the front, so `parsed` stayed null three rounds
-    * running). Budget ≤ 1800 chars: per-query keys are the short registry
-    * id (`q01`, `x31`), values the min-of-3 at %.2f, and the per-row
-    * spread is kept only where it carries signal — `hot_max` lists max
-    * for rows where max ≥ 2×min (the host-contended rows; read rule:
-    * trust min, PLANS.md "bench calibration"). Scalar summary fields —
-    * failed, calibration, value, sf — sit at the END of the line, where
-    * truncation-from-the-front costs the least-diagnostic bytes. */
-  def renderJson(samples: Seq[(String, Seq[Double])], calibration: Seq[Double],
-                 ivfTrain: Double, probeOnly: Double, sfDir: String,
-                 prev: Option[PrevBench] = None,
-                 correctness: Option[String] = None,
-                 load: Option[Double] = None): String = {
-    val rungs = renderRungs(samples, calibration, ivfTrain, probeOnly, sfDir,
-      prev, correctness, load)
-    rungs.find(_.length < 1880).getOrElse(rungs.last)
-  }
-
-  /** Every rung of the self-sizing ladder, finest first — renderJson ships
-    * the first one that fits the tail budget. Public so BenchSanitySpec can
-    * decide from the LADDER (not from value-digit heuristics) whether a
-    * shipped line was allowed to degrade: if a finer rung fits the budget,
-    * shipping a coarser one is a render bug (r14 advice: the old detector
-    * inferred the rung from trailing digits and silently weakened itself
-    * when every hundredths digit happened to be 0). */
-  def renderRungs(samples: Seq[(String, Seq[Double])], calibration: Seq[Double],
-                  ivfTrain: Double, probeOnly: Double, sfDir: String,
-                  prev: Option[PrevBench] = None,
-                  correctness: Option[String] = None,
-                  load: Option[Double] = None): Seq[String] = {
-    // hot_max is the only UNBOUNDED part of the line (a badly contended
-    // host could mark half the registry hot) — cap it at the worst
-    // max/min ratios so the artifact stays inside the driver's 2000-char
-    // tail capture no matter what the host does (round-9 sizing: a real
-    // 119-query line with 6 hot rows measured 1811 bytes, so the static
-    // "keys"/"calibration_job" documentation fields moved OUT of the line
-    // — they live in PLANS.md "bench calibration" and the verify skill).
-    // The registry grows ~8-12 rows a round (r10 line: 1686 bytes of the
-    // 2000 cap), so the cap is now SELF-SIZING, shedding the least
-    // diagnostic bytes first until the line fits 1900: 6 hot rows → 4 →
-    // 0 → per-query precision %.2f → %.1f (100 ms still ranks every row
-    // against a calm baseline). Per-query rows and the scalar tail
-    // (failed/calibration/value) always survive intact.
-    val hotAll = samples.collect {
-      case (k, ts) if ts.min > 0 && ts.max >= 2 * ts.min =>
-        (shortKey(k), ts.max, ts.max / ts.min)
-    }.sortBy(-_._3)
-    val mins = samples.map { case (_, ts) => ts.min }
-    val failed = mins.count(_ < 0)
-    val total = mins.filter(_ >= 0).sum
-    // a %.2f value's trailing zero is a free byte: "0.30" IS 0.3, so trim
-    // it (numeric value unchanged, 10 ms resolution kept where it exists).
-    // At 144 registry rows this claws back ~80 bytes — the difference
-    // between keeping 10 ms precision and degrading the whole map to %.1f
-    // (one zero only: %.2f input always has two decimals, so the result
-    // keeps at least one — "1.00" renders "1.0", never a bare "1")
-    def d2t(x: Double): String = {
-      val s = d2(x)
-      // the contains('.') guard keeps the trim safe if d2t is ever fed an
-      // integer-rendered string path — "10" must never become "1"
-      if (s.endsWith("0") && s.contains('.')) s.dropRight(1) else s
-    }
-    // scalar-tail diet (the 144-row squeeze): 6 calibration samples at
-    // trimmed %.2f read exactly like 10 at %.3f (calm ≈ 0.15-0.4, hot ≥ 1 —
-    // millisecond digits carry no signal), and the constant testdata prefix
-    // on sf is recoverable from the driver's own invocation. Every byte
-    // saved here is a per-query row that keeps its 10 ms digit.
-    // `slots` samples in temporal order, GUARANTEED to include the first,
-    // the last, the maximum, and the minimum — the emitted `noise` band is
-    // max/min over ALL samples, so the two samples that SET the band must
-    // be visible in the displayed trace (the r16 run printed [0.25…0.37]
-    // while noise read 3.49 because the inflated 7th sample was silently
-    // dropped by the old take(6); plain even spacing still missed a max
-    // on an unsampled index). Remaining slots fill evenly for the
-    // temporal shape that localizes contention to a stretch of queries.
-    // 6 slots on the full rungs; 4 (= exactly the guaranteed set) on the
-    // shed rungs, where every byte buys per-query rows.
-    def calibJson(slots: Int): String = {
-      val shown =
-        if (calibration.size <= slots) calibration
-        else {
-          val mustIdx = Seq(0, calibration.size - 1,
-            calibration.indexOf(calibration.max),
-            calibration.indexOf(calibration.min)).distinct
-          val fillIdx = (0 until slots).map(i => i * (calibration.size - 1) / (slots - 1))
-            .filterNot(mustIdx.contains).take(slots - mustIdx.size)
-          (mustIdx ++ fillIdx).sorted.map(calibration)
-        }
-      shown.map(d2t).mkString("[", ",", "]")
-    }
-    // HOST NOISE BAND (r14 verdict item 5): max/min of the run's own
-    // calibration samples — the same fixed job timed through the run, so
-    // the ratio IS the host's scheduler luck during this artifact. Read
-    // rule for the round gate: a per-query regression smaller than this
-    // band on an unchanged plan is host noise, not a plan change (r14 spent
-    // judge+builder attention re-arguing seven such rows; now the artifact
-    // carries the discount factor itself). ~14 bytes.
-    val noiseBand = {
-      val pos = calibration.filter(_ > 0)
-      if (pos.isEmpty) "" else s""""noise":${d2t(pos.max / pos.min)},"""
-    }
-    // last path segment — the data-root prefix is recoverable from the
-    // driver's own invocation, and a non-/root/testdata root must not
-    // silently blow the tail budget with a full path
-    val sfShort = sfDir.split('/').filter(_.nonEmpty).lastOption.getOrElse(sfDir)
-    // SELF-ADJUDICATION vs the previous round (r15 verdict item 1): which
-    // round we compared against, and every row whose noise-discounted
-    // ratio_vs_prev exceeds 2× — worst first, capped (see regressedRows).
-    // An EMPTY regressed object is the signal worth its 15 bytes: it says
-    // "compared against r{N}, nothing regressed", which is exactly the
-    // sentence the judge had to re-run the whole bench to write in r15.
-    // Omitted entirely only when no prior artifact could be read. Lives in
-    // the scalar tail: the adjudication verdict must survive every
-    // self-sizing rung.
-    // scale-factor guard: ratios are only meaningful against the SAME sf
-    // (an sf0.01 smoke run vs an sf0.1 artifact would flag/clear nonsense)
-    val prevField = prev.filter(p => p.sf.isEmpty || p.sf == sfShort).map { p =>
-      val noiseNow = {
-        val pos = calibration.filter(_ > 0)
-        if (pos.isEmpty) 1.0 else pos.max / pos.min
-      }
-      val regr = regressedRows(
-        samples.map { case (k, ts) => shortKey(k) -> ts.min }, p, noiseNow)
-        .map { case (k, r) => "\"" + k + "\":" + d1(r) }
-        .mkString("{", ",", "}")
-      s""""prev":${p.round},"regressed":$regr,"""
-    }.getOrElse("")
-    // CORRECTNESS ATTESTATION (r18 verdict item 2): ~50 B that put the
-    // oracle-gate verdict in the one artifact channel the driver has
-    // captured every round. Scalar tail — survives every self-sizing rung.
-    val attestField = correctness.map(a => s""""correctness":"$a",""").getOrElse("")
-    // HOST LOAD (r19 verdict item 2): 1-minute loadavg at artifact time,
-    // 1 decimal — ~12 B of scalar tail that timestamp residual contention
-    // the calibration trace brackets. Omitted where /proc is unreadable.
-    val loadField = load.map(l => s""""load":${d1(l)},""").getOrElse("")
-    def render(hotCap: Int, dq: Double => String, scalars: Boolean = true,
-               packed: Boolean = false): String = {
-      val qField =
-        if (packed)
-          samples.map { case (k, ts) => shortKey(k) + ":" + dq(ts.min) }
-            .mkString("\"queries_packed\":\"", " ", "\"")
-        else
-          samples.map { case (k, ts) => "\"" + shortKey(k) + "\":" + dq(ts.min) }
-            .mkString("\"queries\":{", ",", "}")
-      val hot = hotAll.take(hotCap)
-        .map { case (k, mx, _) => "\"" + k + "\":" + dq(mx) }
-        .mkString("{", ",", "}")
-      // two more zero-information spends cut at 145 rows: the constant
-      // "runs":3 (documented in the verify skill) and an EMPTY hot_max
-      // object — together the 22 bytes that keep the 10 ms digit alive
-      val hotField = if (hot == "{}") "" else s""""hot_max":$hot,"""
-      val scalarField = if (scalars)
-        s""""ivf_train_sec":${d2t(ivfTrain)},"x03_probe_only_sec":${d2t(probeOnly)},"""
-      else ""
-      s"""{"metric":"total","unit":"sec",""" +
-        s"""$qField,$hotField""" + scalarField +
-        s"""$prevField$attestField$loadField"failed":$failed,$noiseBand""" +
-        s""""calibration_sec":${calibJson(if (scalars) 6 else 4)},""" +
-        s""""value":${Ladder.d3(total)},"sf":"$sfShort"}"""
-    }
-    // threshold matches BenchSanitySpec's < 1880 budget. Budget math since
-    // the round-14 tail hygiene: the dash guard + log-OFF run make the
-    // post-line content DETERMINISTIC — exactly sbt's "[info] " prefix
-    // (7 B) and the "[success] Total time…" trailer (~80 B) share the
-    // 2000-char capture with the line, so 1880 keeps ~30 B of headroom.
-    // (The old 1800 budgeted for nondeterministic mid-stack-trace garbage
-    // around the line; r14 measured the 149-row %.2f render at 1828 B —
-    // the extra 80 B of budget is exactly the 10 ms digit at this
-    // registry size.)
-    //
-    // The 171-row squeeze (r17): the %.1f rung itself outgrew the budget
-    // (1932 B), so two further rungs shed in least-diagnostic order:
-    // (6) drop the two index scalars (they live in PLANS.md history) and
-    // trim calibration to exactly the 4 guaranteed band-setters;
-    // (7, last resort) the per-query map as ONE packed string — `k:v`
-    // pairs space-separated — saving the per-row object punctuation
-    // (~2-3 B/row, ~0.4 KB at this size; headroom to ~220 rows).
-    // loadPrevBench parses both forms, so self-adjudication survives the
-    // format shift; `failed`/`regressed`/`noise`/`calibration`/`value`
-    // survive EVERY rung.
-    Seq(
-      render(6, d2t _), render(4, d2t _), render(2, d2t _), render(0, d2t _),
-      render(0, d1 _),
-      render(0, d1 _, scalars = false),
-      render(0, d1 _, scalars = false, packed = true))
   }
 }

@@ -85,19 +85,22 @@ final class Ladder(spark: SparkSession, emit: String => Unit,
     * names start with any prefix (no prefix: [[Ladder.hotQueries]]).
     *
     * At factor 1 each query reports its min-of-3 warm noop-sink time
-    * (`sec`): the dev-loop pre-screen for a plan change, ~1 min instead of
-    * the full [[Bench]] sweep, on the same session shape as Bench (it
-    * caught the lmScoreCore checkpoint+count variant costing x66
-    * 2.1 s -> 4.2 s before it shipped).
+    * (`sec`): the dev-loop pre-screen for a plan change, ~1 min on a few
+    * prefixes (it caught the lmScoreCore checkpoint+count variant costing
+    * x66 2.1 s -> 4.2 s before it shipped). Prefixes `q x` select every
+    * registry query: the full sweep, whose total is the sum of `sec`.
     *
     * At factor N it is the >1x measured point (r10 verdict): an Nx corpus
     * is synthesized from `sfDir` ([[Ladder.synthesize]]) and each query
     * reports min-of-2 times and output rows at 1x and Nx plus the
     * time-ratio/N `linearity` figure (<= ~1 means at-most-linear; read it
-    * against the calibration sample exactly as in Bench), so superlinear
+    * against the line's calibration sample), so superlinear
     * growth is caught by measurement, not inferred from plan shape. An
     * already-synthesized corpus dir is reused (delete it to force a
-    * rebuild), so iterating on the query list doesn't pay the synth. */
+    * rebuild), so iterating on the query list doesn't pay the synth.
+    *
+    * A query that fails records -1; once every line is printed the run
+    * fails naming those queries, so a sweep with failures never exits 0. */
   def queries(sfDir: String, factor: Int, prefixes: Seq[String]): Unit = {
     val wanted = SparkEntry.defs.filter(q =>
       if (prefixes.isEmpty) hotQueries.contains(q.name) else prefixes.exists(q.name.startsWith))
@@ -119,7 +122,7 @@ final class Ladder(spark: SparkSession, emit: String => Unit,
       val t = minNoop(2, s"${q.name} @ $dir")(q.run(spark, dir))
       (t, if (t < 0) -1L else try q.run(spark, dir).count() catch { case NonFatal(_) => -1L })
     }
-    wanted.foreach { q =>
+    val failed = wanted.filter { q =>
       // Each rung measures ONE query on a quiet session: drop every cached
       // plan and persisted RDD the previous query left behind
       // (localCheckpoint blocks, notably). At 1x the leftovers are noise;
@@ -130,8 +133,9 @@ final class Ladder(spark: SparkSession, emit: String => Unit,
       spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(blocking = true))
       scaled match {
         case None =>
-          out("ladder" -> q.name, "sec" -> minNoop(3, q.name)(q.run(spark, sfDir)),
-            "calibration_sec" -> calibrate(spark))
+          val t = minNoop(3, q.name)(q.run(spark, sfDir))
+          out("ladder" -> q.name, "sec" -> t, "calibration_sec" -> calibrate(spark))
+          t < 0
         case Some(dir) =>
           val (t1, r1) = rung(q, sfDir)
           val (tN, rN) = rung(q, dir)
@@ -139,8 +143,10 @@ final class Ladder(spark: SparkSession, emit: String => Unit,
           out("ladder" -> q.name, "sec_1x" -> t1, s"sec_${factor}x" -> tN,
             "rows_1x" -> r1, s"rows_${factor}x" -> rN, "linearity" -> lin,
             "calibration_sec" -> calibrate(spark))
+          Seq(t1, tN, r1, rN).exists(_ < 0)
       }
     }
+    require(failed.isEmpty, s"queries failed: ${failed.map(_.name).mkString(" ")}")
   }
 
   /** `nfl [games] [playsPerGame]`: the reference-parity pipeline itself
@@ -761,11 +767,11 @@ object Ladder {
   lazy val cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
     .getOrElse(math.min(32, Runtime.getRuntime.availableProcessors()))
 
-  /** The local session every graft main builds ([[Bench]], [[Verify]] and
+  /** The local session every graft main builds ([[Verify]], [[Plans]] and
     * each Ladder mode): [[GraftExtensions]], `local[cpus]`, shuffle width =
     * cpus, UI off, Spark logging OFF (the tools report their own failures
-    * on stderr, and benign in-run log spam once buried Bench's artifact
-    * line). `conf` entries apply last, so they may override the width. */
+    * on stderr, and benign in-run log spam once buried a timing line).
+    * `conf` entries apply last, so they may override the width. */
   def localSession(conf: (String, String)*): SparkSession = {
     val base = SparkSession.builder()
       .withExtensions(new GraftExtensions)

@@ -46,6 +46,18 @@ class LadderSpec extends AnyFunSuite with Matchers with SparkTestBase {
     }
   }
 
+  test("queries: a failing query still prints its -1 line, then the run fails") {
+    val empty = java.nio.file.Files.createTempDirectory("ladder-no-tables").toFile
+    try {
+      val lines = ArrayBuffer.empty[String]
+      val e = intercept[IllegalArgumentException](
+        new Ladder(spark, lines += _, _ => 0.0).run(Seq("queries", empty.getPath, "q10")))
+      lines.map(mapper.readTree).map(n => n.get("ladder").asText -> n.get("sec").asDouble) shouldBe
+        Seq("q10_median" -> -1.0)
+      e.getMessage should include("q10_median")
+    } finally empty.delete()
+  }
+
   test("queries at factor 2: the Nx synth line, then 1x/Nx rungs with rows that scale") {
     val dir = new java.io.File(Ladder.scaledDir(sfDir, 2))
     try {

@@ -188,7 +188,7 @@ class RepoHygieneSpec extends AnyFunSuite with Matchers {
     // doc rot guard: fourteen dev-tool mains were folded into graft.Ladder,
     // and a documented command line must not outlive the object it runs
     val cmd = raw"runMain graft\.([A-Za-z0-9_]+(?:\.[A-Za-z0-9_]+)*)".r
-    val named = Seq("README.md", "PLANS.md").flatMap { f =>
+    val named = Seq("README.md", "PLANS.md", ".claude/skills/verify/SKILL.md").flatMap { f =>
       cmd.findAllMatchIn(new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get(f)), "UTF-8")).map(m => f -> m.group(1))
     }.distinct
