@@ -146,7 +146,7 @@ object BpeTrainer {
   /** Corpus → word counts (the distributed stage) → driver-local training.
     * `dir` is a testdata sf directory with documents.parquet. */
   def trainOn(spark: SparkSession, dir: String, k: Int): Seq[Merge] = {
-    val wc = spark.read.parquet(s"$dir/documents.parquet")
+    val wc = graft.Tables.documents(spark, dir)
       .select(explode(split(trim(col("text")), "\\s+")).as("w"))
       .filter(length(col("w")) > 0)
       .groupBy("w").agg(count(lit(1)).as("n"))

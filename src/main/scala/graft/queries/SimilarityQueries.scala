@@ -246,7 +246,7 @@ object SimilarityQueries {
 
   /** Read centroids back from a [[saveIvfIndex]] artifact (cell order). */
   def loadIvfIndex(s: SparkSession, path: String): Seq[Seq[Double]] =
-    s.read.parquet(path).orderBy("cell")
+    Tables.parquet(s, path).orderBy("cell")
       .collect().map(_.getSeq[Double](1).toSeq).toSeq
 
   /** Build-or-load: return the centroids at `indexPath`, training and
@@ -898,7 +898,7 @@ object SimilarityQueries {
     * the corpus, and a deployment reranks against that store. */
   def pqShortlistFromIndex(s: SparkSession, queries: DataFrame,
       path: String): DataFrame =
-    pqShortlistOf(s.read.parquet(path), queries)
+    pqShortlistOf(Tables.parquet(s, path), queries)
 
   /** APPEND newly accepted vectors to a [[savePqIndex]] artifact — the
     * ingest-side maintenance verb completing the PQ lifecycle (build →
@@ -1308,7 +1308,7 @@ FROM embeddings ORDER BY vec_id""") { (s, d) =>
   def refreshAnnIndex(emb: DataFrame, candidate: Seq[Seq[Double]],
       indexPath: String, pinPath: String): org.apache.spark.sql.Row = {
     val s = emb.sparkSession
-    val pin = s.read.parquet(pinPath).collect()
+    val pin = Tables.parquet(s, pinPath).collect()
     require(pin.length == 1, s"operating-point artifact at $pinPath must be 1 row")
     val pinnedNprobe = pin.head.getAs[Int]("nprobe")
     val pinnedMax = pin.head.getAs[Long]("max_recall_ppm")
@@ -1338,7 +1338,7 @@ FROM embeddings ORDER BY vec_id""") { (s, d) =>
       s.createDataFrame(java.util.Arrays.asList(sweep: _*),
         recallSweepOf(emb, candidate).schema))
     graft.sources.Sinks.parquet(newPin, pinPath)
-    s.read.parquet(pinPath).collect().head
+    Tables.parquet(s, pinPath).collect().head
   }
 
   /** DuckDB replication of x150: identical ppm-integer pipeline — vectors

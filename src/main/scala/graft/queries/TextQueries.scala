@@ -211,7 +211,7 @@ object TextQueries {
   /** Probe-only MinHash dedup from a durable signature artifact: every
     * session after the first skips shingling and signing entirely. */
   def dedupMinhashFromIndex(s: SparkSession, indexPath: String): DataFrame =
-    minhashPairs(s.read.parquet(indexPath)).orderBy("doc_a", "doc_b") // x03's output contract
+    minhashPairs(Tables.parquet(s, indexPath)).orderBy("doc_a", "doc_b") // x03's output contract
 
   /** APPEND admitted documents to a durable [[saveMinhashIndex]] artifact —
     * the missing third verb of the index lifecycle (build → probe →
@@ -242,7 +242,7 @@ object TextQueries {
     *
     * Runs unchanged over a STREAMING `incoming` (stream-static join;
     * DocStreamSpec asserts batch parity): point it at
-    * `spark.read.parquet(indexPath)` of a [[saveMinhashIndex]] artifact and
+    * `Tables.parquet(spark, indexPath)` of a [[saveMinhashIndex]] artifact and
     * new documents are checked against the corpus as they arrive — no
     * watermark, corpus never re-sketched. The sketch/band/verify steps are
     * stateless; the only state is the candidate-pair dropDuplicates
@@ -3193,7 +3193,7 @@ object TextQueries {
 
   /** Read a [[saveDatasheet]] artifact back. */
   def loadDatasheet(s: SparkSession, path: String): DataFrame =
-    s.read.parquet(path)
+    Tables.parquet(s, path)
 
   /** Render merged [[datasheetStatsOf]] stats as the release datasheet
     * (x57's columns plus the batch provenance count). */

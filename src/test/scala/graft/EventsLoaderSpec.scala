@@ -13,6 +13,9 @@ import org.scalatest.matchers.should.Matchers
   * TIMESTAMP(LTZ) column that `unix_micros`/window code can consume. */
 class EventsLoaderSpec extends AnyFunSuite with Matchers with SparkTestBase {
 
+  private val NanosAsLong = "spark.sql.legacy.parquet.nanosAsLong"
+  private val shipped = "/root/testdata/sf0.001"
+
   private def writeEvents(df: org.apache.spark.sql.DataFrame): String = {
     val dir = java.nio.file.Files.createTempDirectory("ev-loader").toString
     df.coalesce(1).write.mode("overwrite").parquet(s"$dir/events.parquet")
@@ -20,7 +23,7 @@ class EventsLoaderSpec extends AnyFunSuite with Matchers with SparkTestBase {
   }
 
   test("shipped testdata loads with a TIMESTAMP ts usable by unix_micros") {
-    val ev = Tables.events(spark, "/root/testdata/sf0.001")
+    val ev = Tables.events(spark, shipped)
     ev.schema("ts").dataType shouldBe TimestampType
     val r = ev.agg(
       count(when(col("ts").isNull, 1)).as("nulls"),
@@ -53,6 +56,37 @@ class EventsLoaderSpec extends AnyFunSuite with Matchers with SparkTestBase {
     val ev = Tables.events(spark, dir)
     ev.schema("ts").dataType shouldBe TimestampType
     ev.select(unix_micros(col("ts"))).head().getLong(0) shouldBe nanos / 1000L
+  }
+
+  test("an INT64 TIMESTAMP(NANOS) file (pre-round-9 layout) converts ns -> us on a fresh session") {
+    import org.apache.hadoop.fs.Path
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.hadoop.util.HadoopOutputFile
+    import org.apache.parquet.schema.MessageTypeParser
+    val nanos = 1767323045678901234L // 2026-01-02T03:04:05.678901234Z in ns
+    val dir = java.nio.file.Files.createTempDirectory("ev-loader-nanos").toString
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; required int64 ts (TIMESTAMP(NANOS,true)); }")
+    val conf = spark.sessionState.newHadoopConf()
+    val w = ExampleParquetWriter.builder(
+      HadoopOutputFile.fromPath(new Path(s"$dir/events.parquet"), conf))
+      .withType(schema).withConf(conf).build()
+    try w.write(new SimpleGroupFactory(schema).newGroup()
+      .append("event_id", 1L).append("ts", nanos))
+    finally w.close()
+    // a fresh session: the loader itself must turn the legacy conf on
+    val fresh = spark.newSession()
+    val ev = Tables.events(fresh, dir)
+    ev.schema("ts").dataType shouldBe TimestampType
+    ev.select(unix_micros(col("ts"))).head().getLong(0) shouldBe nanos / 1000L
+    fresh.conf.get(NanosAsLong) shouldBe "true"
+  }
+
+  test("shipped testdata leaves the legacy nanos conf unset") {
+    val fresh = spark.newSession()
+    Tables.events(fresh, shipped).schema("ts").dataType shouldBe TimestampType
+    fresh.conf.getAll.get(NanosAsLong) shouldBe None
   }
 
   test("an already-LTZ timestamp file passes through unchanged") {

@@ -228,6 +228,27 @@ class RepoHygieneSpec extends AnyFunSuite with Matchers {
     }
   }
 
+  test("no `.read.parquet(` under src/main/scala/graft/queries/ (use Tables)") {
+    // a bare parquet read infers its schema with a Spark job; Tables reads
+    // the footer on the driver instead
+    val queriesRoot = java.nio.file.Paths.get("src/main/scala/graft/queries")
+    assert(java.nio.file.Files.isDirectory(queriesRoot),
+      s"spec must run from the repo root (no $queriesRoot)")
+    val walk = java.nio.file.Files.walk(queriesRoot)
+    val offenders = try {
+      import scala.jdk.CollectionConverters._
+      walk.iterator().asScala.filter(_.toString.endsWith(".scala")).flatMap { p =>
+        val lines = java.nio.file.Files.readAllLines(p, java.nio.charset.StandardCharsets.UTF_8)
+        lines.asScala.zipWithIndex.collect {
+          case (l, i) if l.contains(".read.parquet(") => s"$p:${i + 1}: ${l.trim}"
+        }
+      }.toList
+    } finally walk.close()
+    withClue("schema-inferring parquet reads in queries/ (use Tables.parquet): ") {
+      offenders shouldBe empty
+    }
+  }
+
   test("repo root has no unexpected files") {
     // tests run from the repo root — don't hardcode a checkout path, and
     // treat an unreadable root as a FAILURE, not a vacuous pass

@@ -1,6 +1,12 @@
 package graft
 
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.{Seconds, Span}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -19,7 +25,8 @@ import org.scalatest.matchers.should.Matchers
   */
 class TestdataContractSpec extends AnyFunSuite with Matchers with SparkTestBase {
 
-  private val dir = "/root/testdata/sf0.001"
+  private val sfDirs = Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1")
+  private val dir = sfDirs.head
 
   /** Accept both session-zone and ntz arrivals for shipped-naive columns. */
   private val AnyTimestamp: Set[DataType] = Set(TimestampType, TimestampNTZType)
@@ -96,11 +103,77 @@ class TestdataContractSpec extends AnyFunSuite with Matchers with SparkTestBase 
   test("all three scale factors agree on the events layout") {
     // a partial regeneration (one sf dir changed, others stale) would make
     // sf0.01 correctness and sf0.1 bench disagree — catch it here
-    Seq("/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1")
-      .foreach { d =>
-        withClue(s"$d: ") {
-          Tables.events(spark, d).schema("ts").dataType shouldBe TimestampType
-        }
+    sfDirs.foreach { d =>
+      withClue(s"$d: ") {
+        Tables.events(spark, d).schema("ts").dataType shouldBe TimestampType
       }
+    }
+  }
+
+  test("footer-read schemas equal Spark's inferred ones for every table and scale factor") {
+    for (d <- sfDirs :+ "src/bench/data"; t <- Catalog.tableNames)
+      withClue(s"$d/$t: ") {
+        Tables.load(spark, d, t).schema shouldBe spark.read.parquet(s"$d/$t.parquet").schema
+      }
+  }
+
+  test("a Spark-written multi-part directory loads with its inferred schema and rows") {
+    val dir = java.nio.file.Files.createTempDirectory("tables-parts").resolve("t.parquet").toString
+    spark.range(0, 8, 1, 4).select(
+      col("id"), // non-nullable bigint
+      expr("TIMESTAMP_NTZ '2026-01-02 03:04:05' + make_interval(0, 0, 0, 0, 0, 0, id)").as("ntz"),
+      expr("TIMESTAMP '2026-01-02 03:04:05+00:00' + make_interval(0, 0, 0, 0, 0, 0, id)").as("ltz"),
+      array(col("id").cast("float"), lit(0.5f)).as("vec"))
+      .write.parquet(dir)
+    val parts = new java.io.File(dir).list().count(_.startsWith("part-"))
+    parts should be > 1
+    val inferred = spark.read.parquet(dir)
+    inferred.schema.simpleString shouldBe
+      "struct<id:bigint,ntz:timestamp_ntz,ltz:timestamp,vec:array<float>>"
+    val loaded = Tables.parquet(spark, dir)
+    loaded.schema shouldBe inferred.schema
+    loaded.orderBy("id").collect() shouldBe inferred.orderBy("id").collect()
+  }
+
+  test("a path with no parquet data file fails naming the path") {
+    val empty = java.nio.file.Files.createTempDirectory("tables-empty").toString
+    java.nio.file.Files.createFile(java.nio.file.Paths.get(empty, "_SUCCESS"))
+    val e = intercept[IllegalArgumentException](Tables.parquet(spark, empty))
+    e.getMessage should include(empty)
+  }
+
+  test("loading all ten tables through Tables launches no Spark job") {
+    val sc = spark.sparkContext
+    val key = "graft.tables.probe"
+    val tagged = new AtomicInteger()
+    @volatile var sentinelSeen = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(key))).foreach {
+          case "sentinel" => sentinelSeen = true
+          case _ => tagged.incrementAndGet()
+        }
+    }
+    // the bus delivers in order: once the sentinel job is seen, every job
+    // started before it has been counted
+    def jobsOf(body: => Unit): Int = {
+      tagged.set(0)
+      sentinelSeen = false
+      sc.setLocalProperty(key, "load")
+      try body finally sc.setLocalProperty(key, null)
+      sc.setLocalProperty(key, "sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty(key, null)
+      eventually(timeout(Span(10, Seconds)))(assert(sentinelSeen))
+      tagged.get
+    }
+    sc.addSparkListener(listener)
+    try {
+      // the counter sees a schema-inferring read
+      jobsOf(spark.read.parquet(s"$dir/region.parquet").schema) should be >= 1
+      val loaders = Seq[(org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame](
+        Tables.region, Tables.nation, Tables.customer, Tables.supplier, Tables.part,
+        Tables.orders, Tables.lineitem, Tables.events, Tables.documents, Tables.embeddings)
+      jobsOf(loaders.foreach(_(spark, dir).schema)) shouldBe 0
+    } finally sc.removeSparkListener(listener)
   }
 }
